@@ -15,13 +15,17 @@ object Canonicalize {
     * anything else stays a plain AQE/broadcast-eligible join. Detection
     * runs against `statsSource` (default: `triples`) — pass the
     * materialized snapshot a join chain derives from so the two detection
-    * aggregates never re-execute an unmaterialized plan.
+    * aggregates never re-execute an unmaterialized plan. `statsRows` is
+    * the stats source's row count when the caller knows it; detection
+    * is skipped when no key can be hot ([[Salting.skewSaltsMulti]]).
     */
   def rewriteTriples(triples: DataFrame, canonMap: DataFrame,
-                     statsSource: Option[DataFrame] = None): DataFrame = {
+                     statsSource: Option[DataFrame] = None,
+                     statsRows: Option[Long] = None): DataFrame = {
     val stats = statsSource.getOrElse(triples)
     // ONE detection job covers both endpoint columns
-    val salts = Salting.skewSaltsMulti(stats, Seq("s", "o"), Seq("s", "p", "o"))
+    val salts = Salting.skewSaltsMulti(stats, Seq("s", "o"), Seq("s", "p", "o"),
+      knownRows = statsRows)
     def mapAs(keyCol: String, outName: String) =
       canonMap.withColumnRenamed("node", keyCol)
         .withColumnRenamed("component", outName)

@@ -306,9 +306,13 @@ object GraphAlgs {
     *
     * Phase 2 — pair combine, no backward sweep needed at seed scale:
     * σ_st(v) = σ(s,v)·σ(t,v) iff d(s,v)+d(v,t) = d(s,t) (unit-weight
-    * shortest-path optimal substructure). One self-join of the BFS
-    * state on node (seed pairs s < t) against the broadcast-size
-    * (s, t, d_st) seed-distance relation.
+    * shortest-path optimal substructure). One node-keyed aggregation
+    * collects each node's BFS rows (`collect_list` of (seed, dist,
+    * sigma)), expands the seed pairs s < t in-row, and checks them
+    * against the broadcast-size (s, t, d_st) seed-distance relation.
+    * The per-node group holds at most |S| rows, but the in-row
+    * expansion is quadratic in it, so a large seed set is a memory
+    * hazard: keep S at pivot-sample size.
     *
     * edges(src, dst): pass both directions for an undirected graph.
     * seeds: 1-column `node`. Returns (node, stress) for interior nodes
@@ -391,8 +395,9 @@ object GraphAlgs {
     *
     * edges(src, dst): pass both directions for an undirected graph.
     * Scale shape per round: one map-side-combined min-agg keyed on src
-    * (the proposal), one (node, node)-width self-join for mutuality,
-    * two anti-joins confining edges to survivors — fixed-width id rows
+    * (the proposal), one aggregation keyed on the unordered pair
+    * (least, greatest) whose count = 2 marks a mutual proposal, two
+    * anti-joins confining edges to survivors — fixed-width id rows
     * throughout, nothing ∝ edges². Returns matched pairs (a, b), a < b.
     */
   def maximalMatching(edges: DataFrame, rounds: Int): DataFrame = {

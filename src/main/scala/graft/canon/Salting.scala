@@ -67,14 +67,18 @@ object Salting {
     * two-phase count runs per (endpoint, value), and one final aggregate
     * yields each endpoint's hottest-key count. Callers that guard several
     * joins against the same snapshot (e.g. the s/o triple rewrite) pay
-    * one detection job instead of one per key.
+    * one detection job instead of one per key. A caller that knows `df`'s
+    * row count passes it as `knownRows`: no key can occur more often, so
+    * below the `minHot` floor the answer is "no salt" without any job.
     */
   def skewSaltsMulti(df: DataFrame, keys: Seq[String],
-                     saltFrom: Seq[String]): Map[String, Option[Int]] = {
+                     saltFrom: Seq[String],
+                     knownRows: Option[Long] = None): Map[String, Option[Int]] = {
     val conf = df.sparkSession.conf
     def opt(k: String, d: String) = conf.getOption(k).getOrElse(d)
     val salts = opt("spark.graft.skew.salts", "8").toInt
     val minHot = opt("spark.graft.skew.minHot", "100000").toLong
+    if (knownRows.exists(_ < minHot)) return keys.map(_ -> None).toMap
     val factor = opt("spark.graft.skew.factor", "2.0").toDouble
     val parts = conf.getOption("spark.sql.shuffle.partitions")
       .flatMap(_.toIntOption).getOrElse(200)

@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.{Gazetteer, HtmlText, MentionScan}
@@ -12,7 +16,7 @@ import graft.shape.ShapeRules
 /** End-to-end knowledge-graph construction pipeline (the north rule):
   * pages → byte-identical text extraction → gazetteer mentions → candidate
   * triples → shape validation → connected-component canonicalization →
-  * checkpointed materialization with per-partition lineage.
+  * checkpointed materialization with per-file lineage.
   *
   * Phase structure mirrors the reference's 4-phase streaming converter
   * (`src/formats/rdf/streaming_converter.py:197-237`): each phase is a
@@ -20,9 +24,11 @@ import graft.shape.ShapeRules
   * marker. A rerun resumes from the last completed phase (the sandbox
   * stand-in for Iceberg snapshot checkpoints — same contract: idempotent
   * writes keyed by phase, restart reads the committed snapshot). Lineage:
-  * every phase writes per-partition row counts
-  * (`spark_partition_id → count`) alongside, so a resumed run can prove
-  * input equivalence.
+  * every phase records one (file, rows) row per part file its write tasks
+  * produced, read from the parquet footers on the driver, so a resumed
+  * run can prove input equivalence file by file. A commit costs only its
+  * write: lineage needs no Spark job, and the read-back a commit returns
+  * reuses the schema it just wrote instead of inferring it.
   */
 object KgPipeline {
 
@@ -122,13 +128,77 @@ object KgPipeline {
       case _ => spark.read.parquet(phaseDir(out, phase))
     }
 
-  /** Write a phase snapshot + lineage (per-partition counts). Graph
-    * phases commit bucketed (see above).
+  /** Write `text` to `target` through a hidden temp file + atomic rename:
+    * a kill leaves the old file or the new one, never a torn one. */
+  private def writeAtomically(target: Path, text: String): Unit = {
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+    Files.write(tmp, text.getBytes("UTF-8"))
+    Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  // ---- lineage ---------------------------------------------------------
+  // One JSON line per part file of a committed phase, {"file", "rows"},
+  // with the row count taken from the file's parquet footer on the driver:
+  // no Spark job, and one row per write task rather than per read split.
+  // Written atomically (like `_BUCKETED` and the manifest) after the
+  // snapshot; a commit first deletes the phase's old lineage, so
+  // a kill between the two writes leaves none rather than a stale one.
+
+  private def lineageDir(out: String, phase: String): Path =
+    Paths.get(out, "lineage", s"phase=$phase")
+
+  private def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+    val s = Files.walk(p)
+    try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+    finally s.close()
+  }
+
+  /** A snapshot dir's data files, by Spark's rule: names starting with
+    * `_` or `.` (markers, checksums) are not data. */
+  private def partFiles(dir: String): Seq[Path] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.filter { f =>
+      val n = f.getFileName.toString
+      Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+    }.toSeq.sortBy(_.getFileName.toString)
+    finally s.close()
+  }
+
+  private def writeLineage(spark: SparkSession, out: String, phase: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val lines = partFiles(phaseDir(out, phase)).map { f =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new HPath(f.toUri), conf))
+      val rows = try r.getRecordCount finally r.close()
+      s"""{"file":"${f.getFileName}","rows":$rows}""" + "\n"
+    }
+    val dir = Files.createDirectories(lineageDir(out, phase))
+    writeAtomically(dir.resolve("lineage.json"), lines.mkString)
+  }
+
+  /** A committed phase's row count from its lineage; None when it has
+    * none (an output written before footer lineage, or a commit killed
+    * before its lineage). */
+  private def lineageRows(out: String, phase: String): Option[Long] = {
+    val f = lineageDir(out, phase).resolve("lineage.json")
+    if (!Files.exists(f)) None
+    else Some("\"rows\":(\\d+)".r
+      .findAllMatchIn(new String(Files.readAllBytes(f), "UTF-8"))
+      .map(_.group(1).toLong).sum)
+  }
+
+  /** Write a phase snapshot + its lineage and return the snapshot. Graph
+    * phases commit bucketed (see above). The commit runs only the write's
+    * own jobs: lineage comes from footers, and the read-back is the
+    * catalog table (bucketed) or a parquet read with the schema just
+    * written (plain), neither of which infers a schema.
     */
   private def commit(df: DataFrame, out: String, phase: String): DataFrame = {
     val spark = df.sparkSession
     val dir = phaseDir(out, phase)
-    BucketedPhases.get(phase) match {
+    deleteTree(lineageDir(out, phase))
+    val snapshot = BucketedPhases.get(phase) match {
       case Some(key) if bucketedEnabled(spark) =>
         val name = tableName(out, phase)
         spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -139,11 +209,9 @@ object KgPipeline {
         // not). Atomic tmp+move, like the manifest: a kill mid-write
         // must read as "no marker" (plain-read fallback), never as a
         // garbled layout.
-        val tmp = Paths.get(dir, "._BUCKETED.tmp")
-        Files.write(tmp, s"$key:${snapshotBuckets(spark)}".getBytes("UTF-8"))
-        Files.move(tmp, Paths.get(dir, "_BUCKETED"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        writeAtomically(Paths.get(dir, "_BUCKETED"),
+          s"$key:${snapshotBuckets(spark)}")
+        spark.table(name)
       case _ =>
         // a previous BUCKETED commit of this same dir may have left a
         // catalog entry claiming a layout the new plain files don't
@@ -152,12 +220,10 @@ object KgPipeline {
         if (BucketedPhases.contains(phase))
           spark.sql(s"DROP TABLE IF EXISTS ${tableName(out, phase)}")
         df.write.mode("overwrite").parquet(dir)
+        spark.read.schema(df.schema).parquet(dir)
     }
-    val lineage = spark.read.parquet(dir)
-      .groupBy(spark_partition_id().as("partition"))
-      .agg(count(lit(1)).as("rows"))
-    lineage.coalesce(1).write.mode("overwrite").parquet(s"$out/lineage/phase=$phase")
-    load(spark, out, phase)
+    writeLineage(spark, out, phase)
+    snapshot
   }
 
   // ---- delta snapshots (Iceberg MERGE INTO shape) --------------------
@@ -188,12 +254,7 @@ object KgPipeline {
   private def writeManifest(out: String, prev: String, depth: Int): Unit = {
     require(!prev.contains("\""), s"prev path not manifest-safe: $prev")
     val abs = Paths.get(prev).toAbsolutePath.toString
-    val tmp = Paths.get(out, ".merge_manifest.tmp")
-    Files.write(tmp,
-      s"""{"prev": "$abs", "depth": $depth}""".getBytes("UTF-8"))
-    Files.move(tmp, manifestPath(out),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    writeAtomically(manifestPath(out), s"""{"prev": "$abs", "depth": $depth}""")
   }
 
   private def chainDepth(out: String): Int =
@@ -239,18 +300,25 @@ object KgPipeline {
           failAfterPhase: Option[String] = None): Result = {
 
     // Phase 1 — pages + extraction invariant ---------------------------
-    val pages =
-      if (done(outDir, "pages")) load(spark, outDir, "pages")
-      else {
+    val mismatch = col("extracted") =!= col("text")
+    val (pages, invariantViolations) =
+      if (done(outDir, "pages")) {
+        val p = load(spark, outDir, "pages")
+        (p, p.filter(mismatch).count())
+      } else {
         val p = PageGen.pages(spark, sfDir)
         // native Catalyst expression (doGenCode static call) instead of a
         // UDF: stays inside whole-stage codegen, no catalyst<->scala row
         // conversion on the hot path
         val withExtract = p.withColumn("extracted",
           graft.extract.ExtractMainText(col("html")))
-        commit(withExtract, outDir, "pages")
+        // the invariant is counted by the write job itself (an observed
+        // metric), not by a second scan of the committed snapshot
+        val obs = Observation()
+        val committed = commit(withExtract.observe(obs,
+          count(when(mismatch, lit(1))).as("violations")), outDir, "pages")
+        (committed, obs.get("violations").asInstanceOf[Long])
       }
-    val invariantViolations = pages.filter(col("extracted") =!= col("text")).count()
     failpoint(failAfterPhase, "pages")
 
     // Phase 2 — mentions ----------------------------------------------
@@ -309,9 +377,11 @@ object KgPipeline {
         // the hottest key exceeds its fair reducer share — detection and
         // threshold in graft.canon.Salting.skewSalts. Stats run against
         // the committed triples snapshot so the o-side detection does not
-        // re-execute the s-join.
+        // re-execute the s-join; its lineage row count skips detection
+        // outright when no key can reach the hot floor.
         val rewritten = graft.canon.Canonicalize
-          .rewriteTriples(triples, canonMap, statsSource = Some(triples))
+          .rewriteTriples(triples, canonMap, statsSource = Some(triples),
+            statsRows = lineageRows(outDir, "triples"))
           .distinct()
         (commit(rewritten, outDir, "canonical"), canonMap)
       }

@@ -168,4 +168,24 @@ class SaltingSpec extends graft.SparkSpec {
     assert(got == expected)
     assert(got("HEAD") == 18000L)
   }
+
+  test("skewSaltsMulti: a known row count below minHot decides 'no salt' " +
+       "without a job") {
+    val df = skewed
+    val (salts, jobs) = org.apache.spark.JobCount(spark.sparkContext)(
+      Salting.skewSaltsMulti(df, Seq("entity"), Seq("id"), knownRows = Some(20000L)))
+    assert(salts == Map("entity" -> None))
+    assert(jobs == 0, s"$jobs jobs")
+  }
+
+  test("skewSaltsMulti: the same input with minHot lowered still salts") {
+    val df = skewed
+    spark.conf.set("spark.graft.skew.minHot", "1000")
+    try {
+      val (salts, jobs) = org.apache.spark.JobCount(spark.sparkContext)(
+        Salting.skewSaltsMulti(df, Seq("entity"), Seq("id"), knownRows = Some(20000L)))
+      assert(salts == Map("entity" -> Some(8)))
+      assert(jobs > 0)
+    } finally spark.conf.unset("spark.graft.skew.minHot")
+  }
 }

@@ -20,20 +20,64 @@ class KgPipelineSpec extends SparkSpec {
         .forEach(f => Files.delete(f))
   }
 
+  /** A documents-only sf dir holding one doc_id parity slice of sfDir. */
+  private def halfDir(parity: Int): String = {
+    import org.apache.spark.sql.functions.col
+    val dir = freshDir()
+    spark.read.parquet(s"$sfDir/documents.parquet")
+      .filter(col("doc_id") % 2 === parity)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  /** A phase's lineage names exactly the part files Spark reads for its
+    * snapshot, and its rows sum to the snapshot's row count. */
+  private def assertLineage(out: String, phase: String): Unit = {
+    val lin = spark.read.schema("file STRING, rows LONG")
+      .json(s"$out/lineage/phase=$phase").collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    val snap = spark.read.parquet(s"$out/phase=$phase")
+    val files = snap.inputFiles
+      .map(f => Paths.get(new java.net.URI(f)).getFileName.toString).sorted
+    assert(files.nonEmpty, s"$phase has no part files")
+    assert(lin.map(_._1).sorted.sameElements(files), s"lineage files of $phase")
+    assert(lin.map(_._2).sum == snap.count(), s"lineage rows of $phase")
+  }
+
   test("end-to-end: byte-identical invariant holds, triples non-empty, lineage written") {
-    val out = freshDir()
+    val (a, b) = (halfDir(0), halfDir(1))
+    val out = freshDir(); val outM = freshDir()
     try {
-      val res = KgPipeline.run(spark, sfDir, out)
+      val res = KgPipeline.run(spark, a, out)
       assert(res.invariantViolations == 0)
       assert(res.triples.count() > 0)
       assert(res.canonicalTriples.count() > 0)
-      // per-phase lineage exists with positive row counts
-      for (phase <- Seq("pages", "mentions", "triples", "canonical")) {
-        val lin = spark.read.parquet(s"$out/lineage/phase=$phase")
-        assert(lin.agg(org.apache.spark.sql.functions.sum("rows")).head.getLong(0) > 0,
-          s"lineage for $phase")
+      val merged = KgPipeline.merge(spark, out, b, outM)
+      assert(merged.invariantViolations == 0)
+      // per-file lineage of every phase: the plain ones, the bucketed
+      // graph snapshots, the merge's batch run and its delta commit
+      for (dir <- Seq(out, s"$outM/batch"); phase <- KgPipeline.Phases :+ "issues")
+        assertLineage(dir, phase)
+      for (phase <- Seq("canonical_adds", "canonical_removes",
+          "components_adds", "components_removed_labels"))
+        assertLineage(outM, phase)
+    } finally Seq(a, b, out, outM).foreach(rm)
+  }
+
+  test("a fresh run + merge runs a pinned number of Spark jobs") {
+    val (a, b) = (halfDir(0), halfDir(1))
+    val out = freshDir(); val outM = freshDir()
+    try {
+      val (_, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+        KgPipeline.run(spark, a, out)
+        KgPipeline.merge(spark, out, b, outM)
       }
-    } finally rm(out)
+      // a commit runs only its write's jobs: a lineage re-read (3 jobs per
+      // commit), a schema inference on a plain read-back, a separate
+      // invariant count or a skew aggregation below the hot-key floor
+      // each raises this count
+      assert(jobs == 92, "jobs of one run + merge")
+    } finally Seq(a, b, out, outM).foreach(rm)
   }
 
   test("kill/resume: restart after failpoint completes without recomputing done phases") {
