@@ -44,18 +44,15 @@ object Anf {
     * an undirected graph; nodes are taken from src (symmetrized input
     * covers every non-isolated node).
     *
-    * Rounds are SEMI-NAIVE (the systolic form of HyperANF §4 /
-    * Datalog's delta evaluation): only registers that ROSE last round
-    * are forwarded — an unchanged register was already forwarded the
-    * round it last rose, the receiver max'd it then, and registers
-    * never decrease, so re-sending it cannot change anything. On a
-    * web graph most register mass converges within the effective
-    * diameter, so late rounds ship the o(|V|) frontier still rising
-    * rather than the full |V|·m relation; when a round's delta is
-    * EMPTY the sketch is at its fixpoint and remaining radii are
-    * emitted without another join. The extra per-round cost is one
-    * (node, b)-keyed anti-join of bounded register relations — same
-    * key, same partitioning as the max-agg it follows.
+    * Rounds are [[Relax]] rounds, max keyed on (node, b) (the systolic
+    * form of HyperANF §4): an unchanged register was already forwarded
+    * the round it last rose, the receiver max'd it then, and registers
+    * never decrease, so only registers that ROSE last round are
+    * forwarded. On a web graph most register mass converges within the
+    * effective diameter, so late rounds ship the o(|V|) frontier still
+    * rising rather than the full |V|·m relation; once a round raises no
+    * register the sketch is at its fixpoint and the remaining radii
+    * repeat its summary without another join.
     */
   def neighborhoodFunction(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
@@ -66,55 +63,20 @@ object Anf {
     // ball(v, 0) = {v}: exactly one present register per node. Nodes
     // are seeded from BOTH endpoints so a directed pure-sink still
     // counts itself (symmetrized input makes the union a no-op).
-    var regs = e.select(col("src").as("node"))
+    val regs = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node"))).distinct()
       .select(col("node"), Hll.bucketCol(h).as("b"), Hll.rhoCol(h).as("r"))
       .localCheckpoint()
-    var delta = regs // round 0: everything is new
-    val out = Seq.newBuilder[DataFrame]
-    out += summarize(regs, 0)
-    var t = 1
-    var fixpoint = false
-    while (t <= rounds && !fixpoint) {
-      // OUT-balls, exactly as documented: v → w means v inherits w's
-      // ball, so registers flow dst → src (on symmetrized input the
-      // two orientations coincide)
-      val inherited = e.join(delta, e("dst") === delta("node"))
+    // OUT-balls, exactly as documented: v → w means v inherits w's ball,
+    // so registers flow dst → src (on symmetrized input the two
+    // orientations coincide)
+    val balls = regs +: Relax(regs, Seq("node", "b"), "r", Relax.Max,
+        rounds) { delta =>
+      e.join(delta, e("dst") === delta("node"))
         .select(e("src").as("node"), col("b"), col("r"))
-      // The rose-or-appeared delta falls out of the SAME max-agg (the
-      // sssp/condensation delta idea, round 6) but with PRIMITIVE
-      // aggregates only: alongside max(r), carry the previous round's
-      // register as max(r over old rows) — old rows are unique per
-      // (node, b), so that IS the old value, null for a new register.
-      // delta = old-null-or-strictly-rose ≡ `merged.except(regs)` for
-      // a (node, b)-keyed relation with r functionally determined.
-      // One checkpoint job per round instead of two and the except's
-      // extra shuffle pair over both register relations is gone, while
-      // both aggs keep the codegen'd primitive-buffer HashAggregate (a
-      // max(struct(r, tag)) variant was A/B-refuted: struct buffers
-      // drop to ObjectHashAggregate and measured slower than the
-      // except it replaced).
-      val agged = regs.select(col("node"), col("b"), col("r"),
-          col("r").as("r_old"))
-        .unionAll(inherited.select(col("node"), col("b"), col("r"),
-          lit(null).cast(inherited.schema("r").dataType).as("r_old")))
-        .groupBy("node", "b")
-        .agg(max(col("r")).as("r"), max(col("r_old")).as("r_old"))
-        .localCheckpoint()
-      delta = agged.filter(col("r_old").isNull ||
-          col("r") > col("r_old"))
-        .select("node", "b", "r")
-      fixpoint = delta.isEmpty
-      regs = agged.select("node", "b", "r")
-      out += summarize(regs, t)
-      t += 1
-    }
-    // past the fixpoint every remaining radius reads the same registers
-    while (t <= rounds) {
-      out += summarize(regs, t)
-      t += 1
-    }
-    out.result().reduce(_ unionAll _)
+    }.states
+    (0 to rounds).map(t => summarize(balls(t min (balls.size - 1)), t))
+      .reduce(_ unionAll _)
   }
 
   private def summarize(regs: DataFrame, t: Int): DataFrame =

@@ -97,46 +97,23 @@ object GraphAlgs {
     * table plus one map-side-combined min-agg; within the hop horizon
     * the state is ∝ Σ_v |ball(v, rounds)|, which the horizon (and root
     * sampling) bounds — never |V|² unless the horizon covers the graph.
+    * Rounds are [[Relax]] rounds, min keyed on (root, node): with unit
+    * weights first reach IS min-dist, so only the rows reached last
+    * round can extend a ball.
     */
   def hopCloseness(edges: DataFrame, rounds: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src"))
       .localCheckpoint()
-    var d = e.select(col("src").as("root")).distinct()
+    val seeds = e.select(col("src").as("root")).distinct()
       .select(col("root"), col("root").as("node"), lit(0L).as("dist"))
       .localCheckpoint()
-    // SEMI-NAIVE (round-6, the sssp delta shape): unit-weight BFS first
-    // reach IS min-dist, so only the rows REACHED last round can extend
-    // the ball — stepping from older rows re-derives dominated
-    // distances. Identical fixpoint, per-round joined rows ∝ the
-    // wavefront instead of the whole reached ball × rounds; an empty
-    // delta ends the walk early (provable no-op rounds).
-    var delta = d
-    var k = 0
-    var done = false
-    while (k < rounds && !done) {
-      val stepped = delta.join(e, delta("node") === e("src"))
+    val d = Relax(seeds, Seq("root", "node"), "dist", Relax.Min,
+        rounds) { delta =>
+      delta.join(e, delta("node") === e("src"))
         .select(col("root"), col("dst").as("node"),
           (col("dist") + 1L).as("dist"))
-      // Primitive-aggregate delta (round-6 session 2, the sssp shape):
-      // min(d_old) is the previous value (old rows unique per key),
-      // null for a newly reached (root, node); two primitive mins keep
-      // the codegen'd HashAggregate where min(struct(dist, tag))
-      // dropped to ObjectHashAggregate. Identical rows.
-      val agged = d.select(col("root"), col("node"), col("dist"),
-          col("dist").as("d_old"))
-        .union(stepped.select(col("root"), col("node"), col("dist"),
-          lit(null).cast("long").as("d_old")))
-        .groupBy("root", "node")
-        .agg(min(col("dist")).as("dist"), min(col("d_old")).as("d_old"))
-        .localCheckpoint()
-      d = agged.select("root", "node", "dist")
-      delta = agged.filter(col("d_old").isNull ||
-          col("dist") < col("d_old"))
-        .select("root", "node", "dist")
-      k += 1
-      done = k < rounds && delta.isEmpty
-    }
+    }.state
     d.filter(col("dist") > 0)
       .groupBy("root")
       .agg(count(lit(1)).as("reached"), sum(col("dist")).as("dist_sum"),
@@ -186,7 +163,9 @@ object GraphAlgs {
     // the fixpoint (and the r bookkeeping) is identical and the
     // unrolled oracle replays unchanged. Delta via a tag column on the
     // same min-agg (old tag 0, stepped tag 1; struct-min ties keep the
-    // old row); empty delta ⇒ remaining rounds are provable no-ops.
+    // old row) — the lexicographic (t_arr, r) order is not a pair of
+    // primitive mins, so this is not a [[Relax]] loop; an empty delta
+    // (counted by the checkpoint job) ⇒ remaining rounds are no-ops.
     var delta = d
     var k = 0
     var done = false
@@ -205,12 +184,12 @@ object GraphAlgs {
         .agg(min(struct(col("t_arr"), col("r"), col("tag"))).as("m"))
         .select(col("node"), col("m.t_arr").as("t_arr"),
           col("m.r").as("r"), col("m.tag").as("tag"))
-        .localCheckpoint()
-      d = agged.select("node", "t_arr", "r")
-      delta = agged.filter(col("tag") === 1)
+      val (cp, improved, _) = Relax.countedCheckpoint(agged, col("tag") === 1)
+      d = cp.select("node", "t_arr", "r")
+      delta = cp.filter(col("tag") === 1)
         .select("node", "t_arr", "r")
       k += 1
-      done = k < rounds && delta.isEmpty
+      done = improved == 0
     }
     d.filter(col("r") > 0)
       .select(col("node"), col("t_arr"),
@@ -227,61 +206,30 @@ object GraphAlgs {
     * partitionings and engines (the oracle unrolls the identical
     * recurrence).
     *
-    * SEMI-NAIVE (round-6): each round relaxes only the DELTA — the rows
-    * whose distance strictly improved last round — instead of the whole
-    * reached set. Identical fixpoint (Bellman-Ford's classic delta
-    * argument: a relaxation through an unimproved u was already applied
-    * the round after u last improved, and dist is monotone
-    * non-increasing, so re-relaxing adds nothing), hence the unrolled
-    * oracle replays unchanged; but per-round joined rows are ∝ the
-    * improving frontier, total work ∝ edges — not |reached| × rounds
-    * (the [[doubleSweep]] BFS shape, generalized to weights). The delta
-    * falls out of the SAME min-agg: the old distance rides along as its
-    * own primitive min column (unique per node, null for fresh nodes),
-    * and old-null-or-strictly-improved is the delta — no extra join,
-    * and both mins stay on the codegen'd HashAggregate path (a
-    * struct-min variant forces ObjectHashAggregate). An empty delta is the
-    * fixpoint; the remaining rounds are provable no-ops and are
-    * skipped (one cheap isEmpty on the checkpointed frame per round).
-    * Scale shape: per round one equi-join of the delta against the
-    * src-partitioned edge table plus one map-side-combined min-agg
-    * keyed on node; localCheckpoint cuts the per-round lineage.
+    * Rounds are [[Relax]] rounds, min keyed on node: a relaxation
+    * through an unimproved u was already applied the round after u last
+    * improved, and dist is monotone non-increasing, so each round relaxes
+    * only the nodes whose distance strictly improved last round (the
+    * [[doubleSweep]] BFS shape, generalized to weights) and stops at the
+    * first round that improves none. Scale shape: per round one
+    * equi-join of that delta against the src-partitioned edge table plus
+    * one map-side-combined min-agg keyed on node.
     */
-  def sssp(edges: DataFrame, source: String, rounds: Int): DataFrame = {
+  def sssp(edges: DataFrame, source: String, rounds: Int): DataFrame =
+    ssspTrace(edges, source, rounds).state
+
+  /** [[sssp]] with its relaxation's per-round trace. */
+  private[graft] def ssspTrace(edges: DataFrame, source: String,
+      rounds: Int): Relax.Result = {
     val e = edges.select(col("src"), col("dst"), col("w").cast("long"))
       .repartition(col("src"))
       .localCheckpoint()
-    var dist = e.sparkSession.range(1)
+    val init = e.sparkSession.range(1)
       .select(lit(source).as("node"), lit(0L).as("dist"))
-    var delta = dist
-    var k = 0
-    var done = false
-    while (k < rounds && !done) {
-      val relaxed = e.join(delta, e("src") === delta("node"))
+    Relax(init, Seq("node"), "dist", Relax.Min, rounds) { delta =>
+      e.join(delta, e("src") === delta("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      // Primitive-aggregate delta (round-6 session 2): carry the old
-      // distance as its own min column (old rows are unique per node,
-      // so min(d_old) IS the previous value, null for a fresh node);
-      // delta = old-null-or-strictly-improved — identical rows to the
-      // min(struct(dist, tag)) form, but a struct aggregation buffer
-      // drops HashAggregate to ObjectHashAggregate (no codegen, row
-      // objects), while two primitive mins keep the codegen'd
-      // vectorized path — A/B-measured on the Anf sibling.
-      val agged = dist.select(col("node"), col("dist"),
-          col("dist").as("d_old"))
-        .union(relaxed.select(col("node"), col("dist"),
-          lit(null).cast("long").as("d_old")))
-        .groupBy("node")
-        .agg(min(col("dist")).as("dist"), min(col("d_old")).as("d_old"))
-        .localCheckpoint()
-      dist = agged.select("node", "dist")
-      delta = agged.filter(col("d_old").isNull ||
-          col("dist") < col("d_old"))
-        .select("node", "dist")
-      k += 1
-      done = k < rounds && delta.isEmpty
     }
-    dist
   }
 
   /** Seed-set stress centrality (Shimbel 1953): for every unordered
@@ -423,15 +371,14 @@ object GraphAlgs {
       // old x.src < y.src join. One pair-key exchange replaces the two
       // composite-key exchanges of the self-join, and prop is now
       // consumed once, so its checkpoint job goes too.
-      val mutual = prop
+      val (mutual, pairs, _) = Relax.countedCheckpoint(prop
         .select(least(col("src"), col("p")).as("a"),
           greatest(col("src"), col("p")).as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("c"))
         .filter(col("c") === 2)
-        .select(col("a"), col("b"))
-        .localCheckpoint()
+        .select(col("a"), col("b")), lit(true))
       r += 1
-      if (mutual.isEmpty) {
+      if (pairs == 0) {
         if (out == null) out = mutual
         done = true
       } else {
@@ -1147,21 +1094,21 @@ object GraphAlgs {
     * (authority, freshness, recrawl) should process components in.
     *
     * Scale shape: two dictionary-width label joins contract the edge
-    * list (∝ edges, fixed width); per level round one equi-join of the
-    * level DELTA against the cs-partitioned condensed edges plus one
-    * map-side-combined max-agg — the semi-naive [[sssp]] shape with
-    * max instead of min (round-6): only levels that ROSE last round
-    * are forwarded (a propagation through an unrisen c was already
-    * applied the round after c last rose, and lvl is monotone
-    * non-decreasing), so per-round work is ∝ the rising wavefront and
-    * total work ∝ condensed edges — not |condensation| × depth. The
-    * delta falls out of the same max-agg via a tag column (old rows
-    * tag 1, stepped tag 0; struct-max ties prefer old, so tag 0
-    * survives only on a strict rise); an empty delta is the fixpoint
-    * and the remaining rounds are skipped as provable no-ops.
+    * list (∝ edges, fixed width); the level rounds are [[Relax]]
+    * rounds, max keyed on the SCC: a propagation through an unrisen c
+    * was already applied the round after c last rose, and lvl is
+    * monotone non-decreasing, so each round forwards only the levels
+    * that ROSE last round — one equi-join of that delta against the
+    * cs-partitioned condensed edges plus one map-side-combined max-agg,
+    * total work ∝ condensed edges, not |condensation| × depth.
     * Returns (scc_id, scc_size, level), one row per SCC.
     */
-  def condensation(edges: DataFrame, rounds: Int): DataFrame = {
+  def condensation(edges: DataFrame, rounds: Int): DataFrame =
+    condensationTrace(edges, rounds)._1
+
+  /** [[condensation]] with its level relaxation's per-round trace. */
+  private[graft] def condensationTrace(edges: DataFrame,
+      rounds: Int): (DataFrame, Relax.Result) = {
     val sc = scc(edges).localCheckpoint()
     val lab = sc.select(col("node"), col("scc_id"))
     val e = edges.select(col("src"), col("dst")).distinct()
@@ -1174,36 +1121,17 @@ object GraphAlgs {
       .select(col("cs"), col("cd")).distinct()
       .repartition(col("cs"))
       .localCheckpoint()
-    var lvl = sc.select(col("scc_id").as("c")).distinct()
-      .withColumn("lvl", lit(0L)).localCheckpoint()
-    var delta = lvl
-    var k = 0
-    var done = false
-    while (k < rounds && !done) {
-      val stepped = delta.join(ce, delta("c") === ce("cs"))
+    val levels = Relax(
+        sc.select(col("scc_id").as("c")).distinct()
+          .withColumn("lvl", lit(0L)).localCheckpoint(),
+        Seq("c"), "lvl", Relax.Max, rounds) { delta =>
+      delta.join(ce, delta("c") === ce("cs"))
         .select(col("cd").as("c"), (col("lvl") + 1L).as("lvl"))
-      // Primitive-aggregate delta (round-6 session 2, the sssp shape
-      // with max): max(l_old) is the previous level (old rows unique
-      // per c, and every c is present from round 0), so the risen set
-      // is a strict > — two primitive maxes keep the codegen'd
-      // HashAggregate where max(struct(lvl, tag)) dropped to
-      // ObjectHashAggregate. Identical rows.
-      val agged = lvl.select(col("c"), col("lvl"), col("lvl").as("l_old"))
-        .union(stepped.select(col("c"), col("lvl"),
-          lit(null).cast("long").as("l_old")))
-        .groupBy("c")
-        .agg(max(col("lvl")).as("lvl"), max(col("l_old")).as("l_old"))
-        .localCheckpoint()
-      lvl = agged.select("c", "lvl")
-      delta = agged.filter(col("l_old").isNull ||
-          col("lvl") > col("l_old"))
-        .select("c", "lvl")
-      k += 1
-      done = k < rounds && delta.isEmpty
     }
-    sc.select(col("scc_id"), col("scc_size")).distinct()
-      .join(lvl.withColumnRenamed("c", "scc_id"), Seq("scc_id"))
-      .select(col("scc_id"), col("scc_size"), col("lvl").as("level"))
+    (sc.select(col("scc_id"), col("scc_size")).distinct()
+      .join(levels.state.withColumnRenamed("c", "scc_id"), Seq("scc_id"))
+      .select(col("scc_id"), col("scc_size"), col("lvl").as("level")),
+      levels)
   }
 
   /** Double-sweep diameter lower bound (Magnien, Latapy & Habib 2009):
@@ -1228,10 +1156,9 @@ object GraphAlgs {
       .repartition(col("src")).localCheckpoint()
     // frontier-DELTA BFS: for unit weights first-reach IS min-hop, so
     // each round joins only the NEW nodes — work ∝ edges TOTAL, not
-    // reached × rounds. The per-round isEmpty on the just-checkpointed
-    // frontier costs one tiny scan and buys the early exit: when the
-    // true eccentricity < rounds, the remaining rounds' join jobs
-    // (24 submissions at the kg_diameter call site) never launch.
+    // reached × rounds. The frontier's checkpoint job counts its rows,
+    // which buys the early exit for free: when the true eccentricity <
+    // rounds, the remaining rounds' join jobs never launch.
     def bfs(source: String): DataFrame = {
       var dist = e.sparkSession.range(1)
         .select(lit(source).as("node"), lit(0L).as("dist"))
@@ -1243,12 +1170,13 @@ object GraphAlgs {
         val step = e
           .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node")).distinct()
-        val fr = step.join(dist, Seq("node"), "left_anti")
-          .select(col("node"), lit(k).as("dist")).localCheckpoint()
+        val (fr, reached, _) = Relax.countedCheckpoint(
+          step.join(dist, Seq("node"), "left_anti")
+            .select(col("node"), lit(k).as("dist")), lit(true))
         dist = dist.union(fr)
         frontier = fr.select("node")
         k += 1
-        drained = k <= rounds && fr.isEmpty
+        drained = reached == 0
       }
       dist
     }
@@ -1595,14 +1523,16 @@ object GraphAlgs {
         val nbr = e.join(win.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node"))
         val removed = win.union(nbr).distinct().localCheckpoint()
-        act = act.join(removed, Seq("node"), "left_anti").localCheckpoint()
+        val (left, active, _) = Relax.countedCheckpoint(
+          act.join(removed, Seq("node"), "left_anti"), lit(true))
+        act = left
         e = e.join(removed.withColumnRenamed("node", "src"),
             Seq("src"), "left_anti")
           .join(removed.withColumnRenamed("node", "dst"),
             Seq("dst"), "left_anti")
           .select(col("src"), col("dst"))
           .localCheckpoint()
-        done = act.isEmpty
+        done = active == 0
       }
     }
     out
@@ -1649,19 +1579,19 @@ object GraphAlgs {
         .filter(col("ca") =!= col("cb"))
       val st = struct(col("w"), col("a"), col("b"),
         col("ca"), col("cb"))
-      val chosen = lab.select(col("ca").as("c"), st.as("e"))
+      val (chosen, nChosen, _) = Relax.countedCheckpoint(
+        lab.select(col("ca").as("c"), st.as("e"))
         .union(lab.select(col("cb").as("c"), st.as("e")))
         .groupBy("c").agg(min(col("e")).as("e"))
         .select(col("e.w").as("w"), col("e.a").as("a"),
           col("e.b").as("b"), col("e.ca").as("ca"), col("e.cb").as("cb"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(), lit(true))
       r += 1
       val f = chosen.select(col("a"), col("b"), col("w"),
         lit(r).as("round"))
       out = if (out == null) f.localCheckpoint()
         else out.union(f).localCheckpoint()
-      if (chosen.isEmpty) done = true
+      if (nChosen == 0) done = true
       else if (r < rounds) {
         val merged = ConnectedComponents.run(
             chosen.select(col("ca").as("a"), col("cb").as("b")))
@@ -1812,9 +1742,11 @@ object GraphAlgs {
       colored = if (colored == null) pick
         else colored.union(pick).localCheckpoint()
       if (r < rounds) {
-        unc = unc.join(pick.select(col("node")), Seq("node"), "left_anti")
-          .localCheckpoint()
-        done = unc.isEmpty
+        val (left, uncolored, _) = Relax.countedCheckpoint(
+          unc.join(pick.select(col("node")), Seq("node"), "left_anti"),
+          lit(true))
+        unc = left
+        done = uncolored == 0
       }
     }
     colored

@@ -1,5 +1,6 @@
 package graft.kgql
 
+import graft.canon.Relax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,19 +46,22 @@ object PropertyPath {
       case Some(s) => e.join(s.select(col("src")).distinct(), Seq("src"))
       case None => e
     }
-    var known = seeds.withColumn("dist", lit(1)).localCheckpoint()
+    // each hop's checkpoint job also counts the new frontier, so the
+    // drained-frontier exit costs no job of its own
+    var (known, reached, _) = Relax.countedCheckpoint(
+      seeds.withColumn("dist", lit(1)), lit(true))
     var frontier = known
     var hop = 1
-    while (hop < maxHops && !frontier.isEmpty) {
+    while (hop < maxHops && reached > 0) {
       hop += 1
-      val next = frontier
+      val (next, n, _) = Relax.countedCheckpoint(frontier
         .select(col("src"), col("dst").as("via"))
         .join(e.select(col("src").as("via"), col("dst")), Seq("via"))
         .select(col("src"), col("dst"))
         .distinct()
         .join(known.select("src", "dst"), Seq("src", "dst"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint()
+        .withColumn("dist", lit(hop)), lit(true))
+      reached = n
       // round-6: keep `known` as a lazy union of the per-hop
       // checkpointed frames (the doubleSweep dist shape) — the old
       // checkpoint on the union re-materialized ALL known rows every

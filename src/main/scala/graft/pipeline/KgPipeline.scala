@@ -265,10 +265,7 @@ object KgPipeline {
   def loadCanonical(spark: SparkSession, out: String): DataFrame =
     readManifest(out) match {
       case Some((prev, _)) =>
-        loadCanonical(spark, prev)
-          .join(load(spark, out, "canonical_removes"),
-            Seq("s", "p", "o"), "left_anti")
-          .union(load(spark, out, "canonical_adds"))
+        chainCanonical(loadCanonical(spark, prev), load(spark, out, _))
       case None => load(spark, out, "canonical")
     }
 
@@ -277,12 +274,7 @@ object KgPipeline {
   def loadComponents(spark: SparkSession, out: String): DataFrame =
     readManifest(out) match {
       case Some((prev, _)) =>
-        loadComponents(spark, prev)
-          .join(load(spark, out, "components_removed_labels")
-            .withColumnRenamed("label", "component"),
-            Seq("component"), "left_anti")
-          .select("node", "component")
-          .union(load(spark, out, "components_adds"))
+        chainComponents(loadComponents(spark, prev), load(spark, out, _))
       case None =>
         if (done(out, "components")) load(spark, out, "components")
         // legacy layout: rebuild from the RAW candidate triples — the
@@ -291,6 +283,22 @@ object KgPipeline {
         // member; round-4 pass-3 review)
         else componentsFromTriples(load(spark, out, "triples"))
     }
+
+  /** One delta link of a canonical chain: `prev` with the link's
+    * `phase`s applied. */
+  private def chainCanonical(prev: DataFrame,
+      phase: String => DataFrame): DataFrame =
+    prev.join(phase("canonical_removes"), Seq("s", "p", "o"), "left_anti")
+      .union(phase("canonical_adds"))
+
+  /** One delta link of a component-map chain. */
+  private def chainComponents(prev: DataFrame,
+      phase: String => DataFrame): DataFrame =
+    prev.join(phase("components_removed_labels")
+        .withColumnRenamed("label", "component"),
+        Seq("component"), "left_anti")
+      .select("node", "component")
+      .union(phase("components_adds"))
 
   /** Run (or resume) the pipeline. Each completed phase is skipped on
     * rerun — the kill/resume test asserts byte-identical final output.
@@ -418,10 +426,10 @@ object KgPipeline {
             failAfterPhase: Option[String] = None): Result = {
     val batch = run(spark, sfDir, s"$outDir/batch", gazetteer, failAfterPhase)
     failpoint(failAfterPhase, "batch")
-    commitMerge(spark, prevOut,
+    val merged = commitMerge(spark, prevOut,
       KgGraph(batch.canonicalTriples, batch.components), outDir)
-    Result(batch.triples, loadCanonical(spark, outDir), batch.issues,
-      batch.invariantViolations, loadComponents(spark, outDir))
+    Result(batch.triples, merged.triples, batch.issues,
+      batch.invariantViolations, merged.components)
   }
 
   /** True when `out` is a committed FULL snapshot (no manifest chain) —
@@ -453,19 +461,21 @@ object KgPipeline {
     * per-micro-batch streaming ingestion
     * ([[graft.streaming.KgStream]]). Idempotent: an already-committed
     * `outDir` is left untouched, so a replayed micro-batch or resumed
-    * run cannot double-apply.
+    * run cannot double-apply. Returns the merged graph at `outDir`,
+    * resolved like [[loadCanonical]]/[[loadComponents]] but from the
+    * frames this call committed and the `prevOut` graph it read (or
+    * loaded, when `outDir` was already committed).
     */
   def commitMerge(spark: SparkSession, prevOut: String, batchGraph: KgGraph,
-                  outDir: String): Unit = {
-    if (readManifest(outDir).isDefined || done(outDir, "canonical")) return
+                  outDir: String): KgGraph = {
+    if (readManifest(outDir).isDefined || done(outDir, "canonical"))
+      return KgGraph(loadCanonical(spark, outDir),
+        loadComponents(spark, outDir))
     // back-compat chains through loadComponents: manifest chain,
     // committed snapshot, or in-memory rebuild from triples for
     // pre-components layouts (never mutates prev)
     val conf = spark.conf
-    val prevComps0 =
-      if (done(prevOut, "components") ||
-          readManifest(prevOut).isDefined) loadComponents(spark, prevOut)
-      else componentsFromTriples(load(spark, prevOut, "triples"))
+    val prevComps0 = loadComponents(spark, prevOut)
     // mergeParts consumes prev triples/components in several passes;
     // over a manifest CHAIN each pass would re-execute the d-level
     // anti-join/union resolution (the multi-consumer plan-blowup
@@ -486,20 +496,26 @@ object KgPipeline {
       .forall(_.toBoolean)
     val compactEvery = conf.getOption("spark.graft.merge.compactEvery")
       .map(_.toInt).getOrElse(8)
+    def commitAll(phases: (String, DataFrame)*): Map[String, DataFrame] =
+      phases.map { case (p, df) => p -> commit(df, outDir, p) }.toMap
     if (useDelta && chainDepth(prevOut) + 1 < compactEvery) {
       // delta commit: every write is ∝ batch. Manifest LAST = the
       // commit point; a kill before it leaves `done` false and the
       // merge recomputes idempotently.
-      commit(parts.delta, outDir, "canonical_adds")
-      commit(parts.rewrittenSource, outDir, "canonical_removes")
-      commit(parts.subMap, outDir, "components_adds")
-      commit(parts.touchedPrevLabels.withColumnRenamed("component",
-        "label"), outDir, "components_removed_labels")
+      val deltas = commitAll(
+        "canonical_adds" -> parts.delta,
+        "canonical_removes" -> parts.rewrittenSource,
+        "components_adds" -> parts.subMap,
+        "components_removed_labels" -> parts.touchedPrevLabels
+          .withColumnRenamed("component", "label"))
       writeManifest(outDir, prevOut, chainDepth(prevOut) + 1)
+      KgGraph(chainCanonical(prevTriples0, deltas),
+        chainComponents(prevComps0, deltas))
     } else {
       // compaction (or delta disabled): full snapshot, chain reset
-      commit(parts.graph.components, outDir, "components")
-      commit(parts.graph.triples, outDir, "canonical")
+      val full = commitAll("components" -> parts.graph.components,
+        "canonical" -> parts.graph.triples)
+      KgGraph(full("canonical"), full("components"))
     }
   }
 

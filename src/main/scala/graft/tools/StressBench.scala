@@ -435,15 +435,28 @@ object StressBench {
 
     // ---- semi-naive fixpoint laws (round-6 verdict #1/#2): per-round
     // forwarded rows ∝ the improving frontier, not |reached| × rounds.
-    // Replays the EXACT delta recurrence GraphAlgs.sssp /
-    // GraphAlgs.condensation run (tag-agg, ties to old), recording per
-    // round [delta_rows, state_rows]: delta_rows is what the semi-naive
-    // shape joins against the edge table next round; state_rows is what
-    // the old full-relaxation shape joined EVERY round. Law: Σ delta ≈
-    // |reached| (each row forwarded ~once ⇒ total work ∝ edges) and
-    // delta collapses to 0 after the frontier passes, while the old
-    // shape's per-round joined rows stay at |state| forever.
+    // Runs the production GraphAlgs.sssp / GraphAlgs.condensation level
+    // loop and reads its Relax trace, per round [delta_rows, state_rows]:
+    // delta_rows is what the semi-naive shape joins against the edge
+    // table next round; state_rows is what the old full-relaxation shape
+    // joined EVERY round. Law: Σ delta ≈ |reached| (each row forwarded
+    // ~once ⇒ total work ∝ edges) and delta collapses to 0 after the
+    // frontier passes, while the old shape's per-round joined rows stay
+    // at |state| forever. The loop stops at its first empty delta; the
+    // rounds it skips read [0, final state], as the old shape would
+    // have joined the full state in each of them.
     if (sections("seminaive")) {
+      val budget = 12
+      def law(t: graft.canon.Relax.Result, stateKey: String,
+          sec: Double): String = {
+        val rs = t.trace ++
+          Seq.fill(budget - t.trace.size)((0L, t.trace.last._2))
+        s"""{"per_round_delta_vs_state":[${
+          rs.map { case (d, s) => s"[$d,$s]" }.mkString(",")
+        }],"sum_delta":${rs.map(_._1).sum},"$stateKey":${rs.last._2},""" +
+          s""""old_shape_joined_rows":${rs.map(_._2).sum},"converged":${
+          t.converged},"sec":$sec}"""
+      }
       val li0 = spark.read.parquet(s"$base/lineitem.parquet")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       // weighted SSSP delta law on the undirected order–part graph
@@ -451,76 +464,24 @@ object StressBench {
         concat(lit("p"), col("pk")).as("dst"))
       val und = e0.union(e0.select(col("dst").as("src"),
           col("src").as("dst")))
-        .distinct().withColumn("w", lit(1L))
-        .repartition(col("src")).localCheckpoint()
+        .distinct().withColumn("w", lit(1L)).localCheckpoint()
       val s0 = und.select(col("src")).agg(min(col("src")))
         .collect()(0).getString(0)
-      var dist = spark.range(1)
-        .select(lit(s0).as("node"), lit(0L).as("dist"))
-      var delta = dist
-      val ssspRounds = scala.collection.mutable.ListBuffer[(Long, Long)]()
-      val (_, ssspSec) = time {
-        for (_ <- 1 to 12) {
-          val relaxed = und.join(delta, und("src") === delta("node"))
-            .select(col("dst").as("node"),
-              (col("dist") + col("w")).as("dist"))
-          val agged = dist.select(col("node"), col("dist"),
-              col("dist").as("d_old"))
-            .union(relaxed.select(col("node"), col("dist"),
-              lit(null).cast("long").as("d_old")))
-            .groupBy("node")
-            .agg(min(col("dist")).as("dist"), min(col("d_old")).as("d_old"))
-            .localCheckpoint()
-          dist = agged.select("node", "dist")
-          delta = agged.filter(col("d_old").isNull ||
-              col("dist") < col("d_old"))
-            .select("node", "dist")
-          ssspRounds += ((delta.count(), dist.count()))
-        }
-      }
-      frags += s""""seminaive_sssp":{"per_round_delta_vs_state":[${
-        ssspRounds.map { case (d, s) => s"[$d,$s]" }.mkString(",")
-      }],"sum_delta":${ssspRounds.map(_._1).sum},"final_state":${
-        ssspRounds.last._2},"old_shape_joined_rows":${
-        ssspRounds.map(_._2).sum},"sec":$ssspSec}"""
+      val (sssp, ssspSec) =
+        time(graft.canon.GraphAlgs.ssspTrace(und, s0, budget))
+      frags += s""""seminaive_sssp":${law(sssp, "final_state", ssspSec)}"""
       // condensation-level delta law on a planted depth-8 chain DAG
-      // (every part p links to p+1 within its 8-block): the level
-      // wavefront shrinks by one block-position per round and DRAINS at
-      // round 8 — rounds 9-12 forward zero rows, while the old
-      // full-re-agg shape would keep aggregating all |V| rows
-      val parts = li0.select(col("pk")).distinct()
-      val chain = parts.select(concat(lit("c"), col("pk")).as("cs"),
-          concat(lit("c"), col("pk") + 1).as("cd"))
+      // (every part p links to p+1 within its 8-block, so every part is
+      // its own SCC): the level wavefront shrinks by one block-position
+      // per round and DRAINS at round 8, while the old full-re-agg shape
+      // would keep aggregating all |V| rows
+      val chain = li0.select(col("pk")).distinct()
+        .select(concat(lit("c"), col("pk")).as("src"),
+          concat(lit("c"), col("pk") + 1).as("dst"))
         .where(col("pk") % 8 =!= 7)
-        .repartition(col("cs")).localCheckpoint()
-      var lvl = chain.select(col("cs").as("c"))
-        .union(chain.select(col("cd").as("c"))).distinct()
-        .withColumn("lvl", lit(0L)).localCheckpoint()
-      var ldelta = lvl
-      val lvlRounds = scala.collection.mutable.ListBuffer[(Long, Long)]()
-      val (_, lvlSec) = time {
-        for (_ <- 1 to 12) {
-          val stepped = ldelta.join(chain, ldelta("c") === chain("cs"))
-            .select(col("cd").as("c"), (col("lvl") + 1L).as("lvl"))
-          val agged = lvl.select(col("c"), col("lvl"),
-              col("lvl").as("l_old"))
-            .union(stepped.select(col("c"), col("lvl"),
-              lit(null).cast("long").as("l_old")))
-            .groupBy("c")
-            .agg(max(col("lvl")).as("lvl"), max(col("l_old")).as("l_old"))
-            .localCheckpoint()
-          lvl = agged.select("c", "lvl")
-          ldelta = agged.filter(col("l_old").isNull ||
-              col("lvl") > col("l_old"))
-            .select("c", "lvl")
-          lvlRounds += ((ldelta.count(), lvl.count()))
-        }
-      }
-      frags += s""""seminaive_condense":{"per_round_delta_vs_state":[${
-        lvlRounds.map { case (d, s) => s"[$d,$s]" }.mkString(",")
-      }],"sum_delta":${lvlRounds.map(_._1).sum},"n_sccs":${
-        lvlRounds.last._2},"old_shape_joined_rows":${
-        lvlRounds.map(_._2).sum},"sec":$lvlSec}"""
+      val ((_, levels), lvlSec) =
+        time(graft.canon.GraphAlgs.condensationTrace(chain, budget))
+      frags += s""""seminaive_condense":${law(levels, "n_sccs", lvlSec)}"""
     }
 
     // ---- as-of join: output ∝ input, one merge pass per partition -----

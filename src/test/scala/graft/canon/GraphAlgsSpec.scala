@@ -297,4 +297,16 @@ class GraphAlgsSpec extends SparkSpec {
     val second = (10 until 15).map(i => labels(s"c$i")).distinct
     assert(second.size == 1, s"second clique not united: $second")
   }
+
+  test("doubleSweep on a path runs a pinned number of Spark jobs") {
+    val path = (0 until 8).map(i => (s"n$i", s"n${i + 1}"))
+    val sym = (path ++ path.map(_.swap)).toDF("src", "dst")
+    val (sweep, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      GraphAlgs.doubleSweep(sym, rounds = 12)
+    }
+    assert(sweep.count() == 9)
+    // both sweeps drain after 8 hops; a separate isEmpty per round on
+    // the frontier raises this count
+    assert(jobs == 95, "jobs of doubleSweep(rounds = 12)")
+  }
 }
