@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.Meter
 import org.apache.spark.sql.functions._
 
 import graft.extract.{Gazetteer, HtmlText, MentionScan}
@@ -20,7 +20,8 @@ import graft.pages.PageGen
   * REP.
   *
   * Usage: SPARK_GRAFT_CPUS=8 SPARK_GRAFT_REP=64 sbt "runMain graft.ScalingBench"
-  * Prints one JSON line: docs, seconds, docs_per_sec, parallelism.
+  * Prints one JSON line: docs, seconds, docs_per_sec, parallelism, and
+  * the fastest run's [[org.apache.spark.Meter]] cost.
   */
 object ScalingBench {
 
@@ -64,54 +65,11 @@ object ScalingBench {
     scored.agg(count(lit(1))).head.getLong(0) + co.count()
   }
 
-  /** The round-3 front end (string entities off the trie, fused string
-    * histogram) — kept measurable so the dictionary-encoded path can be
-    * compared under a matched window (round-3 verdict #5's acceptance).
-    */
-  def frontEndOnceString(replicated: org.apache.spark.sql.DataFrame,
-                         bc: org.apache.spark.broadcast.Broadcast[graft.extract.Gazetteer],
-                         entities: Seq[String], nDocs: Long): Long = {
-    val spark = replicated.sparkSession
-    import spark.implicits._
-    val pages = replicated.as[(Long, String, String, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text, lang, source) =>
-          val html = PageGen.template(id, lang, source, HtmlText.escape(text))
-            .getBytes(StandardCharsets.UTF_8)
-          (id, html)
-        }
-      }.toDF("doc_id", "html")
-    val extracted = pages.as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val trie = bc.value
-        it.map { case (id, html) =>
-          val text = HtmlText.extractMainFromBytes(html)
-          (id, trie.countMatches(text).toSeq.map { case (e, tf) => (e, tf.toLong) }.sorted)
-        }
-      }.toDF("doc_id", "mentions")
-      .localCheckpoint()
-    val flat = extracted.select(col("doc_id"),
-      explode(col("mentions")).as("m"))
-      .select(col("doc_id"), col("m._1").as("entity"), col("m._2").as("tf"))
-    val sets = extracted.select(col("doc_id"), col("mentions._1").as("es"))
-    val scored = MentionScan.scored(flat, nDocs)
-    val co = MentionScan.coOccurrenceFused(sets, entities)
-    scored.agg(count(lit(1))).head.getLong(0) + co.count()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val rep = sys.env.getOrElse("SPARK_GRAFT_REP", "64").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    val cpus = LocalSession.cores
+    val spark = LocalSession()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text", "lang", "source")
@@ -121,7 +79,7 @@ object ScalingBench {
       .crossJoin(spark.range(rep).toDF("rep"))
       .select((col("doc_id") + col("rep") * 10000000L).as("doc_id"),
         col("text"), col("lang"), col("source"))
-      .repartition(cpus.toInt * 4)
+      .repartition(cpus * 4)
       .localCheckpoint()
     val nDocs = replicated.count()
 
@@ -134,63 +92,22 @@ object ScalingBench {
     val bcIdx = spark.sparkContext.broadcast(
       entitiesSorted.zipWithIndex.toMap)
 
-    def runOnce(): Long = {
-      val pages = replicated.as[(Long, String, String, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text, lang, source) =>
-            val html = PageGen.template(id, lang, source, HtmlText.escape(text))
-              .getBytes(StandardCharsets.UTF_8)
-            (id, html)
-          }
-        }.toDF("doc_id", "html")
-      // single scan emits BOTH the flat mention rows and the per-doc set:
-      // co-occurrence needs no doc-keyed shuffle (see MentionScan scaladoc)
-      val extracted0 = pages.as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val trie = bc.value
-          val idx = bcIdx.value
-          it.map { case (id, html) =>
-            val text = HtmlText.extractMainFromBytes(html)
-            val counts = trie.countMatches(text)
-            // index-sorted = lexicographic entity order (dict is sorted)
-            (id, counts.toSeq.map { case (e, tf) => (idx(e), tf.toLong) }.sorted)
-          }
-        }.toDF("doc_id", "mentions")
-      // full mode consumes the scan twice (scoring + co-occurrence):
-      // materialize it once instead of re-extracting per sink
-      val stage = sys.env.getOrElse("SPARK_GRAFT_STAGE", "full")
-      val extracted =
-        if (stage == "full") extracted0.localCheckpoint() else extracted0
-      val flat = extracted.select(col("doc_id"),
-        explode(col("mentions")).as("m"))
-        .select(col("doc_id"), col("m._1").as("entity"), col("m._2").as("tf"))
-      val sets = extracted.select(col("doc_id"),
-        col("mentions._1").as("es"))
-      stage match {
-        case "extract" => flat.agg(count(lit(1))).head.getLong(0)
-        case "score" =>
-          MentionScan.scored(flat, nDocs).agg(count(lit(1))).head.getLong(0)
-        case "cooccur_explode" => // the declarative path, kept measurable
-          MentionScan.coOccurrenceFromSets(sets).count()
-        case "cooccur" =>
-          MentionScan.coOccurrenceFusedIdx(sets, Gazetteer.DefaultEntities).count()
-        case "full_string" => // round-3 front end, for matched comparison
-          frontEndOnceString(replicated, bc, entitiesSorted, nDocs)
-        case _ =>
-          frontEndOnce(replicated, bc, bcIdx, entitiesSorted, nDocs)
-      }
-    }
+    def runOnce(): Long =
+      frontEndOnce(replicated, bc, bcIdx, entitiesSorted, nDocs)
 
     runOnce() // warmup (codegen + JIT)
-    var sink = 0L
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val times = (1 to iters).map { _ =>
-      val t0 = System.nanoTime()
-      sink = runOnce()
-      (System.nanoTime() - t0) / 1e9
+    val runs = (1 to iters).map { _ =>
+      Meter(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        val sink = runOnce()
+        (sink, (System.nanoTime() - t0) / 1e9)
+      }
     }
-    val secs = times.min // steady-state (JIT/GC warm)
-    println(s"""{"metric":"kg_front_end","docs":$nDocs,"seconds":$secs,"runs":[${times.mkString(",")}],"docs_per_sec":${nDocs / secs},"parallelism":$cpus,"rep":$rep,"sink":$sink}""")
+    val times = runs.map(_._1._2)
+    // steady-state (JIT/GC warm): the fastest run, with its Spark cost
+    val ((sink, secs), cost) = runs.minBy(_._1._2)
+    println(s"""{"metric":"kg_front_end","docs":$nDocs,"seconds":$secs,"runs":[${times.mkString(",")}],"docs_per_sec":${nDocs / secs},"parallelism":$cpus,"rep":$rep,"sink":$sink,"cost":${cost.json}}""")
     spark.stop()
   }
 }

@@ -564,14 +564,12 @@ object GraphAlgs {
     * remaining degree.
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .localCheckpoint()
     // Round-6: peel survivors ⊆ input each round, so an unchanged edge
     // count proves the exact fixpoint — remaining rounds are no-ops
     // and are skipped (the kTruss early-exit argument, node-degree
-    // flavored).
-    var eCnt = e.count()
+    // flavored). Each count is observed on its frame's checkpoint job.
+    var (e, _, eCnt) = Relax.countedCheckpoint(
+      edges.select(col("src"), col("dst")).repartition(col("src")), lit(true))
     var r = 0
     var done = false
     while (r < rounds && !done) {
@@ -584,12 +582,12 @@ object GraphAlgs {
         .filter(col("deg") >= k)
         .select(col("src"))
         .localCheckpoint()
-      e = e.join(alive, Seq("src"), "left_semi")
-        .join(alive.withColumnRenamed("src", "dst"), Seq("dst"),
-          "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint()
-      val c2 = e.count()
+      val (e2, _, c2) = Relax.countedCheckpoint(
+        e.join(alive, Seq("src"), "left_semi")
+          .join(alive.withColumnRenamed("src", "dst"), Seq("dst"),
+            "left_semi")
+          .select(col("src"), col("dst")), lit(true))
+      e = e2
       r += 1
       done = r < rounds && c2 == eCnt
       eCnt = c2
@@ -639,7 +637,6 @@ object GraphAlgs {
         .select(col("ed.a").as("a"), col("ed.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
     }
-    var e = edges.select(col("a"), col("b")).distinct().localCheckpoint()
     // Round-6: peeling is monotone (each round's survivors ⊆ the
     // round's input), so an unchanged edge COUNT proves the exact
     // fixpoint — every remaining round is a no-op and the support
@@ -648,15 +645,15 @@ object GraphAlgs {
     // Early exit both skips those rounds and reuses that table,
     // saving one whole wedge-join enumeration vs the unconditional
     // trailing support(e) the fixed-rounds loop paid before.
-    var eCnt = e.count()
+    var (e, _, eCnt) = Relax.countedCheckpoint(
+      edges.select(col("a"), col("b")).distinct(), lit(true))
     var supAtFixpoint: DataFrame = null
     var r = 0
     while (r < rounds && supAtFixpoint == null) {
       val sup = support(e).localCheckpoint()
-      val e2 = sup.filter(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-        .localCheckpoint()
-      val c2 = e2.count()
+      val (e2, _, c2) = Relax.countedCheckpoint(
+        sup.filter(col("support") >= k - 2).select(col("a"), col("b")),
+        lit(true))
       if (c2 == eCnt) supAtFixpoint = sup
       e = e2
       eCnt = c2
@@ -1624,15 +1621,16 @@ object GraphAlgs {
     * round's nodes as (node, n_nodes, n_edges, best_round).
     */
   def densestSubgraph(edges: DataFrame, rounds: Int): DataFrame = {
-    var e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
-      .localCheckpoint()
-    var v = e.select(col("src").as("node")).distinct().localCheckpoint()
+    var (e, _, ne0) = Relax.countedCheckpoint(
+      edges.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst")).distinct()
+        .repartition(col("src")), lit(true))
+    var (v, _, nv0) = Relax.countedCheckpoint(
+      e.select(col("src").as("node")).distinct(), lit(true))
     var best = v
     var bestR = 0
-    var bestNe = e.count() / 2
-    var bestNv = v.count()
+    var bestNe = ne0 / 2
+    var bestNv = nv0
     var bestD = if (bestNv == 0) -1.0 else bestNe.toDouble / bestNv
     // Round-6: a round that drops no node leaves (v, e) unchanged, so
     // every later round recomputes the identical state and density —
@@ -1651,18 +1649,19 @@ object GraphAlgs {
       if (nv == 0) done = true
       else {
         val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-        v = v.join(deg, v("node") === deg("src"), "left")
-          .filter(coalesce(col("deg"), lit(0L)) * nv > lit(3L) * ne)
-          .select(col("node"))
-          .localCheckpoint()
-        e = e.join(v.withColumnRenamed("node", "src"), Seq("src"),
-            "left_semi")
-          .join(v.withColumnRenamed("node", "dst"), Seq("dst"),
-            "left_semi")
-          .select(col("src"), col("dst"))
-          .localCheckpoint()
-        val ne2 = e.count() / 2
-        val nv2 = v.count()
+        val (v2, _, nv2) = Relax.countedCheckpoint(
+          v.join(deg, v("node") === deg("src"), "left")
+            .filter(coalesce(col("deg"), lit(0L)) * nv > lit(3L) * ne)
+            .select(col("node")), lit(true))
+        v = v2
+        val (e2, _, ee2) = Relax.countedCheckpoint(
+          e.join(v.withColumnRenamed("node", "src"), Seq("src"),
+              "left_semi")
+            .join(v.withColumnRenamed("node", "dst"), Seq("dst"),
+              "left_semi")
+            .select(col("src"), col("dst")), lit(true))
+        e = e2
+        val ne2 = ee2 / 2
         val d = if (nv2 == 0) -1.0 else ne2.toDouble / nv2
         if (d > bestD) {
           bestD = d; best = v; bestR = r; bestNe = ne2; bestNv = nv2

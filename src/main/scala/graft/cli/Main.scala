@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.ontology._
 import graft.rdf.TurtleParser
 import graft.shape.Preflight
@@ -21,17 +22,6 @@ import graft.pipeline.StatsAggregator
   *   kg       <sfDir> <outDir>        checkpointed KG pipeline (north rule)
   */
 object Main {
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def triplesOf(spark: SparkSession, path: String) = {
     InputValidation.validatePath(path, InputValidation.TtlExtensions) match {
@@ -55,7 +45,7 @@ object Main {
   private def run(args: List[String],
                   stopOwned: SparkSession => Unit): Unit = args match {
     case "convert" :: in :: out :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val t = triplesOf(spark, in)
       val name = OntologyName.extract(t)
       val cls = Extract.classesWithIds(t)
@@ -93,7 +83,7 @@ object Main {
         println(if (graft.dtdl.DtdlValidator.isValid(issues))
           "valid: yes" else "valid: no")
       } else {
-        val spark = session()
+        val spark = LocalSession()
         val issues = Preflight.validate(triplesOf(spark, in)).localCheckpoint()
         issues.orderBy("category").collect().foreach { r =>
           println(s"[${r.getAs[String]("severity")}] ${r.getAs[String]("category")}: " +
@@ -104,7 +94,7 @@ object Main {
       }
 
     case "export" :: in :: out :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val json = java.nio.file.Files.readString(java.nio.file.Paths.get(in))
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val root = mapper.readTree(json)
@@ -121,7 +111,7 @@ object Main {
       stopOwned(spark)
 
     case "compare" :: a :: b :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       def names(path: String) = {
         val t = triplesOf(spark, path)
         val cls = Extract.classesWithIds(t).localCheckpoint()
@@ -143,7 +133,7 @@ object Main {
     // fabric_to_ttl.py:526-568): extract → export to triples → re-extract
     // → semantic diff + P/R
     case "test" :: in :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val t = triplesOf(spark, in)
       val cls = Extract.classesWithIds(t).localCheckpoint()
       val assignment = Extract.propertyAssignment(t, cls).localCheckpoint()
@@ -176,7 +166,7 @@ object Main {
       if (!allMatch) sys.exit(1)
 
     case "kg" :: sfDir :: outDir :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val res = graft.pipeline.KgPipeline.run(spark, sfDir, outDir)
       println(s"kg pipeline: triples=${res.canonicalTriples.count()} " +
         s"invariantViolations=${res.invariantViolations} " +
@@ -185,7 +175,7 @@ object Main {
 
     // incremental ingestion: merge a new batch into a previous kg output
     case "kg-merge" :: prevOut :: sfDir :: outDir :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val res = graft.pipeline.KgPipeline.merge(spark, prevOut, sfDir, outDir)
       println(s"kg merge: triples=${res.canonicalTriples.count()} " +
         s"components=${res.components.count()}")
@@ -193,7 +183,7 @@ object Main {
 
     // training-data curation funnel over the documents table (round 3)
     case "curate" :: sfDir :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       graft.queries.DataQueries.ddPipeline(spark, sfDir).collect().foreach { r =>
         println(s"${r.getString(1)}: docs=${r.getLong(2)} tokens=${r.getLong(3)}")
       }
@@ -201,7 +191,7 @@ object Main {
 
     // ANN search over the embeddings table: top-k neighbors of a vec_id
     case "search" :: sfDir :: vecId :: k :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       import org.apache.spark.sql.functions.col
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       graft.ann.Similarity.bruteForceTopK(emb,
@@ -215,7 +205,7 @@ object Main {
     // files: each file becomes a micro-batch delta merge (manifest chain
     // + HEAD commit log; re-running with the same checkpoint resumes)
     case "kg-stream" :: srcDir :: outDir :: ckptDir :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val schema = spark.read.parquet(srcDir).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
@@ -230,7 +220,7 @@ object Main {
 
     // line-level dedup report over the documents table (round 5)
     case "lines" :: sfDir :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val s = graft.queries.DataQueries.ddLines(spark, sfDir)
         .agg(org.apache.spark.sql.functions.sum("n_kept"),
           org.apache.spark.sql.functions.sum("n_dropped")).head
@@ -246,7 +236,7 @@ object Main {
           s"phash: maxDist ${maxDist} exceeds the pigeonhole recall bound (3)")
         sys.exit(2)
       }
-      val spark = session()
+      val spark = LocalSession()
       import org.apache.spark.sql.functions.col
       val hashes = graft.multimodal.Multimodal.perceptualHashes(
         graft.multimodal.Multimodal.mediaTable(spark, sfDir))
@@ -258,7 +248,7 @@ object Main {
 
     // entity salience: top-10 by integer PageRank (round 5)
     case "pagerank" :: sfDir :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       graft.queries.KgQueries.kgPagerank(spark, sfDir)
         .orderBy(org.apache.spark.sql.functions.col("score").desc,
           org.apache.spark.sql.functions.col("node"))
@@ -268,7 +258,7 @@ object Main {
 
     // audio near-dup pairs via the energy-delta fingerprint (round 5)
     case "audio-fp" :: sfDir :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       import org.apache.spark.sql.functions.col
       val fp = graft.multimodal.Multimodal.audioFingerprint(
         graft.multimodal.Multimodal.mediaTable(spark, sfDir))
@@ -280,7 +270,7 @@ object Main {
     // SPARQL-subset query over the KG triple table (round 5): the query
     // text is read from a file so shells don't mangle IRIs
     case "sparql" :: sfDir :: queryFile :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val text = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(queryFile)), "UTF-8")
       val pages = graft.pages.PageGen.pages(spark, sfDir)
@@ -294,7 +284,7 @@ object Main {
 
     // train a BPE tokenizer on the documents table, print the merges
     case "bpe" :: sfDir :: nMerges :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val merges = graft.text.Bpe.train(docs, nMerges.toInt)
       merges.zipWithIndex.foreach { case ((a, b), i) =>
@@ -306,7 +296,7 @@ object Main {
 
     // exact-substring duplicated-span report (round 5)
     case "spans" :: sfDir :: Nil =>
-      val spark = session()
+      val spark = LocalSession()
       import org.apache.spark.sql.functions._
       val r = graft.dedup.Dedup.duplicateSpans(
         spark.read.parquet(s"$sfDir/documents.parquet"))

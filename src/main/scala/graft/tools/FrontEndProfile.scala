@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 
 import graft.extract.{Gazetteer, HtmlText}
 import graft.pages.PageGen
@@ -16,9 +15,7 @@ import graft.pages.PageGen
 object FrontEndProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text", "lang", "source")
       .collect()

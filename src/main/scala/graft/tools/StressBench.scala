@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.Meter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.canon.ConnectedComponents
@@ -49,21 +50,14 @@ object StressBench {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rep = sys.env.getOrElse("SPARK_GRAFT_STRESS_REP", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "/tmp/graft_stress")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.LocalSession.cores
     val sections = sys.env.getOrElse("SPARK_GRAFT_STRESS_SECTIONS",
       "cc,dd,kg,inc,ivf,ivfpq,skew,lines,pagerank,spans,path,asof,range," +
         "domcap,sketch,bm25,tri,hits,kcore,quantile,chunk,keywords," +
         "fuzzy,closeness,openie,zorder,scc,central,truss,contain,anf," +
         "simrank,egosample,decay,bowtie,wl,interleave,seminaive")
       .split(",").map(_.trim).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     val reps = spark.range(rep).toDF("k")
     val docs = spark.read.parquet(s"$base/documents.parquet")
@@ -85,7 +79,7 @@ object StressBench {
             .otherwise(regexp_replace(col("text"), lit("(\\S+)"),
               concat(lit("$1~"), col("k")))).as("text"),
           col("lang"), col("source"), col("n_chars"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/dd/documents.parquet")
       val emb = spark.read.parquet(s"$base/embeddings.parquet")
       val dim = emb.select(size(col("embedding"))).head.getInt(0)
@@ -96,7 +90,7 @@ object StressBench {
           concat(slice(col("embedding"), col("k") + 1, lit(dim) - col("k")),
             slice(col("embedding"), lit(1), col("k"))).as("embedding"),
           col("label"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/dd/embeddings.parquet")
     }
     if (sections("kg") || sections("inc"))
@@ -104,7 +98,7 @@ object StressBench {
       docs.crossJoin(reps).select(
           (col("doc_id") + col("k") * 100000000L).as("doc_id"),
           col("text"), col("lang"), col("source"), col("n_chars"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/kg/documents.parquet")
 
     // ---- CC rounds at 1x and REPx --------------------------------------
@@ -237,15 +231,6 @@ object StressBench {
 
     // ---- power-law CC skew: hub entity in 50% of edges (round-5 #10) ----
     if (sections("skew")) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-      val maxRead = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            maxRead.accumulateAndGet(
-              t.taskMetrics.shuffleReadMetrics.totalBytesRead, Math.max)
-      }
-      spark.sparkContext.addSparkListener(listener)
       val K = 500000L
       def ent(c: org.apache.spark.sql.Column) =
         concat(lit("e"), lpad(c.cast("string"), 7, "0"))
@@ -272,12 +257,11 @@ object StressBench {
           spark.conf.set(k, if (k.contains("Threshold")) "-1" else "false")
         }
         try {
-          maxRead.set(0)
-          val ((comp, rounds), secs) = time {
+          val (((comp, rounds), secs), cost) = Meter(spark.sparkContext)(time {
             val (c, r) = ConnectedComponents.runWithRounds(edges)
             (c.localCheckpoint(), r)
-          }
-          (rounds, comp.count(), maxRead.get(), secs)
+          })
+          (rounds, comp.count(), cost.maxTaskShuffleReadBytes, secs)
         } finally saved.foreach {
           case (k, Some(v)) => spark.conf.set(k, v)
           case (k, None) => spark.conf.unset(k)
@@ -285,7 +269,6 @@ object StressBench {
       }
       val (rG, nG, mG, sG) = runCc(guard = true)
       val (rU, nU, mU, sU) = runCc(guard = false)
-      spark.sparkContext.removeSparkListener(listener)
       frags += s""""skew_cc":{"edges":$nEdges,"hub_degree":$hubDeg,"nodes":$nG,"guarded":{"rounds":$rG,"max_task_shuffle_read":$mG,"sec":$sG},"unguarded":{"rounds":$rU,"nodes":$nU,"max_task_shuffle_read":$mU,"sec":$sU}}"""
     }
 
@@ -303,16 +286,7 @@ object StressBench {
     // then fixed: Spark 4's WindowGroupLimit makes the window plan
     // scale-shaped, so the window (keys-only) is the production path.
     if (sections("domcap")) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
       import org.apache.spark.sql.expressions.Window
-      val maxRead = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            maxRead.accumulateAndGet(
-              t.taskMetrics.shuffleReadMetrics.totalBytesRead, Math.max)
-      }
-      spark.sparkContext.addSparkListener(listener)
       val docs = spark.range(1000000).select(
         col("id").as("doc_id"),
         when(col("id") % 2 === 0, lit("hot.example.com"))
@@ -333,27 +307,22 @@ object StressBench {
           .select("doc_id", "source", "n_chars", "text")
       }
       def prodFull = graft.mix.DomainCap.cap(docs, n)
-      def measure(f: => DataFrame): (Long, Long, Double) = {
-        // consume text bytes — a bare count() would let Catalyst prune
-        // the text column out of BOTH plans and void the comparison
-        maxRead.set(0)
-        val (rows, secs) = time(
-          f.agg(count(lit(1)), sum(length(col("text")))).head.getLong(0))
-        (rows, maxRead.get(), secs)
+      def measure(rowsOf: => Long): (Long, Long, Double) = {
+        val ((rows, secs), cost) = Meter(spark.sparkContext)(time(rowsOf))
+        (rows, cost.maxTaskShuffleReadBytes, secs)
       }
-      val (rP, mP, sP) = measure(prodFull)
-      val (rW, mW, sW) = measure(winFull)
-      val (rG, mG, sG) = {
-        maxRead.set(0)
-        val (rows, secs) =
-          time(graft.mix.DomainCap.capKeysAgg(docs, n).count())
-        (rows, maxRead.get(), secs)
-      }
+      // consume text bytes — a bare count() would let Catalyst prune
+      // the text column out of BOTH plans and void the comparison
+      def rowsWithText(df: DataFrame): Long =
+        df.agg(count(lit(1)), sum(length(col("text")))).head.getLong(0)
+      val (rP, mP, sP) = measure(rowsWithText(prodFull))
+      val (rW, mW, sW) = measure(rowsWithText(winFull))
+      val (rG, mG, sG) =
+        measure(graft.mix.DomainCap.capKeysAgg(docs, n).count())
       val diff = prodFull.select("doc_id", "source", "n_chars", "text")
         .except(winFull).count()
       val winGroupLimit = graft.mix.DomainCap.capKeys(docs, n)
         .queryExecution.executedPlan.toString.contains("WindowGroupLimit")
-      spark.sparkContext.removeSparkListener(listener)
       frags += s""""domcap":{"docs":1000000,"hot_share":0.5,"cap":$n,"survivors":$rP,"set_diff_vs_window":$diff,"window_group_limit":$winGroupLimit,"production_keys_window_semijoin":{"max_task_shuffle_read":$mP,"sec":$sP},"naive_fullrow_window":{"rows":$rW,"max_task_shuffle_read":$mW,"sec":$sW},"typed_aggregator":{"rows":$rG,"max_task_shuffle_read":$mG,"sec":$sG}}"""
     }
 
@@ -979,14 +948,6 @@ object StressBench {
       // group a tight min/max envelope on BOTH columns, so parquet
       // footer stats prune on either; the x-sorted layout prunes on x
       // only and decodes the full y domain inside the x slice.
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead)
-      }
-      spark.sparkContext.addSparkListener(listener)
       val n = 2000000L
       val side = 1024L
       // deterministic full-grid scatter: x from the low id bits, y from
@@ -1023,30 +984,19 @@ object StressBench {
       val envZ = envelopes(s"$out/zorder/zord.parquet")
       // timed evidence on the y-only probe — the query the x-sort can't
       // prune; payload summed so surviving row groups must decode it
-      // the listener bus is ASYNC: drain it to a stable reading before
-      // resetting and before reading, or warm-up task-end events bleed
-      // into the timed figure / the timed job's tail events are missed
-      def settle(): Unit = {
-        var prev = -1L
-        while (bytesRead.get() != prev) {
-          prev = bytesRead.get(); Thread.sleep(250)
-        }
-      }
       def yScan(path: String): (Long, Double, Long) = {
         val d = spark.read.parquet(path)
           .filter(col("y").between(100, 131))
           .agg(count(lit(1)).as("rows"),
             coalesce(sum(length(col("payload"))), lit(0L)).as("bytes"))
         d.collect() // warm footers
-        settle(); bytesRead.set(0)
-        val (rows, secs) = time(d.head.getLong(0))
-        settle()
-        (rows, secs, bytesRead.get())
+        val ((rows, secs), cost) =
+          Meter(spark.sparkContext)(time(d.head.getLong(0)))
+        (rows, secs, cost.inputBytes)
       }
       val (r1, s1, b1) = yScan(s"$out/zorder/bycol.parquet")
       val (r2, s2, b2) = yScan(s"$out/zorder/zord.parquet")
       require(r1 == r2, s"layouts disagree: $r1 vs $r2")
-      spark.sparkContext.removeSparkListener(listener)
       frags += s""""zorder":{"files":${envB.length},""" +
         s""""bycol_files_xprobe":${touched(envB, 100, 131, onY = false)},""" +
         s""""bycol_files_yprobe":${touched(envB, 100, 131, onY = true)},""" +
@@ -1293,7 +1243,7 @@ object StressBench {
       val ev = spark.read.parquet(s"$base/events.parquet")
       def decayStats(df: DataFrame): (Long, Long, Double) = {
         val dir = s"$out/decay_in"
-        df.repartition(cpus.toInt).write.mode("overwrite")
+        df.repartition(cpus).write.mode("overwrite")
           .parquet(s"$dir/events.parquet")
         val (r, secs) = time {
           graft.queries.RelationalQueries.q26Decay(spark, dir)

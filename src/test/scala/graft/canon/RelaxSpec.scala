@@ -77,11 +77,11 @@ class RelaxSpec extends SparkSpec {
       .groupBy("a", "b").agg(min(col("w")).as("w"))
     val und = e0.select(col("a").as("src"), col("b").as("dst"), col("w"))
       .union(e0.select(col("b").as("src"), col("a").as("dst"), col("w")))
-    val (dist, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+    val (dist, cost) = org.apache.spark.Meter(spark.sparkContext) {
       GraphAlgs.sssp(und, "o0", 6)
     }
     assert(dist.count() == 193)
     // a separate isEmpty/count exit test per round raises this count
-    assert(jobs == 21, "jobs of sssp(rounds = 6)")
+    assert(cost.jobs == 21, "jobs of sssp(rounds = 6)")
   }
 }

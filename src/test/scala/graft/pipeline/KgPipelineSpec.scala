@@ -68,7 +68,7 @@ class KgPipelineSpec extends SparkSpec {
     val (a, b) = (halfDir(0), halfDir(1))
     val out = freshDir(); val outM = freshDir()
     try {
-      val (_, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      val (_, cost) = org.apache.spark.Meter(spark.sparkContext) {
         KgPipeline.run(spark, a, out)
         KgPipeline.merge(spark, out, b, outM)
       }
@@ -77,7 +77,7 @@ class KgPipelineSpec extends SparkSpec {
       // invariant count, a skew aggregation below the hot-key floor or a
       // merge that re-loads the delta snapshot it just committed each
       // raises this count
-      assert(jobs == 88, "jobs of one run + merge")
+      assert(cost.jobs == 88, "jobs of one run + merge")
     } finally Seq(a, b, out, outM).foreach(rm)
   }
 
