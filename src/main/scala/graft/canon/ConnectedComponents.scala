@@ -45,7 +45,8 @@ object ConnectedComponents {
     // materialize the input once: it feeds BOTH the iteration seed and the
     // final node list — an unmaterialized DF would re-execute its whole
     // upstream (e.g. the mention scan) a second time at the label join
-    val e0 = edges.localCheckpoint()
+    // (its checkpoint job also counts it, for the path choice below)
+    val (e0, edgeRows) = Relax.countedCheckpoint(edges)
     // adaptive path choice: a dictionary-scale graph (the co-mention
     // graph over a bounded gazetteer stays dictionary-sized at any
     // corpus scale) pays ~5 rounds of distributed job latency for work a
@@ -56,7 +57,7 @@ object ConnectedComponents {
     // the threshold selects.
     val localThreshold = spark.conf.getOption("spark.graft.cc.localThreshold")
       .map(_.toLong).getOrElse(100000L)
-    if (e0.count() <= localThreshold)
+    if (edgeRows <= localThreshold)
       localUnionFind(e0).foreach(df => return (df, 0))
 
     def canon(df: DataFrame): DataFrame =

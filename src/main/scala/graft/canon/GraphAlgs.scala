@@ -371,12 +371,12 @@ object GraphAlgs {
       // old x.src < y.src join. One pair-key exchange replaces the two
       // composite-key exchanges of the self-join, and prop is now
       // consumed once, so its checkpoint job goes too.
-      val (mutual, pairs, _) = Relax.countedCheckpoint(prop
+      val (mutual, pairs) = Relax.countedCheckpoint(prop
         .select(least(col("src"), col("p")).as("a"),
           greatest(col("src"), col("p")).as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("c"))
         .filter(col("c") === 2)
-        .select(col("a"), col("b")), lit(true))
+        .select(col("a"), col("b")))
       r += 1
       if (pairs == 0) {
         if (out == null) out = mutual
@@ -568,8 +568,8 @@ object GraphAlgs {
     // count proves the exact fixpoint — remaining rounds are no-ops
     // and are skipped (the kTruss early-exit argument, node-degree
     // flavored). Each count is observed on its frame's checkpoint job.
-    var (e, _, eCnt) = Relax.countedCheckpoint(
-      edges.select(col("src"), col("dst")).repartition(col("src")), lit(true))
+    var (e, eCnt) = Relax.countedCheckpoint(
+      edges.select(col("src"), col("dst")).repartition(col("src")))
     var r = 0
     var done = false
     while (r < rounds && !done) {
@@ -582,11 +582,11 @@ object GraphAlgs {
         .filter(col("deg") >= k)
         .select(col("src"))
         .localCheckpoint()
-      val (e2, _, c2) = Relax.countedCheckpoint(
+      val (e2, c2) = Relax.countedCheckpoint(
         e.join(alive, Seq("src"), "left_semi")
           .join(alive.withColumnRenamed("src", "dst"), Seq("dst"),
             "left_semi")
-          .select(col("src"), col("dst")), lit(true))
+          .select(col("src"), col("dst")))
       e = e2
       r += 1
       done = r < rounds && c2 == eCnt
@@ -645,15 +645,14 @@ object GraphAlgs {
     // Early exit both skips those rounds and reuses that table,
     // saving one whole wedge-join enumeration vs the unconditional
     // trailing support(e) the fixed-rounds loop paid before.
-    var (e, _, eCnt) = Relax.countedCheckpoint(
-      edges.select(col("a"), col("b")).distinct(), lit(true))
+    var (e, eCnt) = Relax.countedCheckpoint(
+      edges.select(col("a"), col("b")).distinct())
     var supAtFixpoint: DataFrame = null
     var r = 0
     while (r < rounds && supAtFixpoint == null) {
       val sup = support(e).localCheckpoint()
-      val (e2, _, c2) = Relax.countedCheckpoint(
-        sup.filter(col("support") >= k - 2).select(col("a"), col("b")),
-        lit(true))
+      val (e2, c2) = Relax.countedCheckpoint(
+        sup.filter(col("support") >= k - 2).select(col("a"), col("b")))
       if (c2 == eCnt) supAtFixpoint = sup
       e = e2
       eCnt = c2
@@ -973,12 +972,13 @@ object GraphAlgs {
     * Returns (node, scc_id, scc_size).
     */
   def scc(edges: DataFrame): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val (e0, edgeRows) = Relax.countedCheckpoint(edges
+      .select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
+      .distinct())
     val localThreshold = e0.sparkSession.conf
       .getOption("spark.graft.scc.localThreshold")
       .map(_.toLong).getOrElse(100000L)
-    if (e0.count() <= localThreshold)
+    if (edgeRows <= localThreshold)
       localTarjan(e0).foreach(df => return df)
     // confine the edge set to surviving nodes (kCore's two-endpoint
     // semi-join; `keep` is checkpointed by every caller, so the
@@ -1041,10 +1041,9 @@ object GraphAlgs {
         // COLLECT: backward BFS from roots, confined to the color
         // class — 4 lazy expansion rounds per growth check (the
         // union∪step closure is idempotent past the fixpoint too)
-        var member = color.filter(col("node") === col("color"))
-          .select(col("node"), col("node").as("scc_id"))
-          .localCheckpoint()
-        var memberCnt = member.count()
+        var (member, memberCnt) = Relax.countedCheckpoint(color
+          .filter(col("node") === col("color"))
+          .select(col("node"), col("node").as("scc_id")))
         var growing = true
         while (growing) {
           var next = member
@@ -1058,9 +1057,8 @@ object GraphAlgs {
               .select(col("node"), col("scc_id"))
             next = next.union(back).distinct()
           }
-          next = next.localCheckpoint()
-          val nextCnt = next.count()
-          member = next
+          val (grown, nextCnt) = Relax.countedCheckpoint(next)
+          member = grown
           if (nextCnt == memberCnt) growing = false
           memberCnt = nextCnt
         }
@@ -1140,52 +1138,58 @@ object GraphAlgs {
     * construction. Two frontier-delta BFS passes (per round one
     * equi-join of only the NEW frontier + one anti-join — total work
     * ∝ edges; a DRAINED frontier ends the sweep early, skipping the
-    * remaining rounds' job submissions outright, round-6) + two 1-row
-    * driver argmax scalars; returns per-node distances from u with
-    * `sweep_src` and `diam_lb` inline. `rounds` hop-bounds both sweeps
-    * (the engine's fixed-rounds convention, matching the oracle's
-    * bounded closure; exact when ≥ the true eccentricities — skipped
-    * empty-frontier rounds are provable no-ops, so the hop-bounded
-    * result is unchanged).
+    * remaining rounds' job submissions outright, round-6); returns
+    * per-node distances from u with `sweep_src` and `diam_lb` inline.
+    * Every scalar rides a checkpoint job as an observed metric: the
+    * start node is the min endpoint observed on the edge checkpoint, u
+    * the min node of the first sweep's last non-empty frontier (the
+    * farthest ring, smallest id first) and `diam_lb` the round of the
+    * second sweep's last non-empty frontier — no scalar job of its own.
+    * `rounds` hop-bounds both sweeps (the engine's fixed-rounds
+    * convention, matching the oracle's bounded closure; exact when ≥
+    * the true eccentricities — skipped empty-frontier rounds are
+    * provable no-ops, so the hop-bounded result is unchanged).
     */
   def doubleSweep(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).localCheckpoint()
+    // start node = min over BOTH endpoint roles (matches the oracle's
+    // src UNION dst min; identical on the symmetric-input contract, and
+    // correct for any future directed caller — round-6 advice)
+    val (e, em) = Relax.observedCheckpoint(
+      edges.select(col("src"), col("dst")).distinct().repartition(col("src")),
+      min(least(col("src"), col("dst"))).as("s0"))
     // frontier-DELTA BFS: for unit weights first-reach IS min-hop, so
     // each round joins only the NEW nodes — work ∝ edges TOTAL, not
-    // reached × rounds. The frontier's checkpoint job counts its rows,
-    // which buys the early exit for free: when the true eccentricity <
-    // rounds, the remaining rounds' join jobs never launch.
-    def bfs(source: String): DataFrame = {
+    // reached × rounds. The frontier's checkpoint job counts its rows
+    // and finds its min node: the count buys the early exit for free
+    // (when the true eccentricity < rounds, the remaining rounds' join
+    // jobs never launch), and the last non-empty frontier is the
+    // farthest ring. Returns (dist, farthest round, its min node).
+    def bfs(source: String): (DataFrame, Long, String) = {
       var dist = e.sparkSession.range(1)
         .select(lit(source).as("node"), lit(0L).as("dist"))
         .localCheckpoint()
       var frontier = dist.select("node")
+      var (far, farNode) = (0L, source)
       var k = 1L
       var drained = false
       while (k <= rounds && !drained) {
         val step = e
           .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node")).distinct()
-        val (fr, reached, _) = Relax.countedCheckpoint(
+        val (fr, m) = Relax.observedCheckpoint(
           step.join(dist, Seq("node"), "left_anti")
-            .select(col("node"), lit(k).as("dist")), lit(true))
+            .select(col("node"), lit(k).as("dist")),
+          count(lit(1)).as("reached"), min(col("node")).as("first"))
+        drained = m("reached") == 0L
+        if (!drained) { far = k; farNode = m("first").asInstanceOf[String] }
         dist = dist.union(fr)
         frontier = fr.select("node")
         k += 1
-        drained = reached == 0
       }
-      dist
+      (dist, far, farNode)
     }
-    // start node = min over BOTH endpoint roles (matches the oracle's
-    // src UNION dst min; identical on the symmetric-input contract, and
-    // correct for any future directed caller — round-6 advice)
-    val s0 = e.select(col("src")).union(e.select(col("dst")))
-      .agg(min(col("src"))).collect()(0).getString(0)
-    val u = bfs(s0).orderBy(col("dist").desc, col("node").asc)
-      .limit(1).collect()(0).getString(0)
-    val d2 = bfs(u).localCheckpoint()
-    val diam = d2.agg(max(col("dist"))).collect()(0).getLong(0)
+    val (_, _, u) = bfs(em("s0").asInstanceOf[String])
+    val (d2, diam, _) = bfs(u)
     d2.select(col("node"), col("dist"), lit(u).as("sweep_src"),
       lit(diam).as("diam_lb"))
   }
@@ -1285,18 +1289,18 @@ object GraphAlgs {
     // SCC (dictionary) scale, and node-level classes come back through
     // one broadcast join against the scc labeling
     val lab = sc.select(col("node"), col("scc_id"))
-    val ce = e0
+    val (ce, ceRows) = Relax.countedCheckpoint(e0
       .join(lab.withColumnRenamed("node", "src")
         .withColumnRenamed("scc_id", "cs"), Seq("src"))
       .join(lab.withColumnRenamed("node", "dst")
         .withColumnRenamed("scc_id", "cd"), Seq("dst"))
       .filter(col("cs") =!= col("cd"))
-      .select(col("cs"), col("cd")).distinct().localCheckpoint()
+      .select(col("cs"), col("cd")).distinct())
     val localThreshold = spark.conf
       .getOption("spark.graft.scc.localThreshold")
       .map(_.toLong).getOrElse(100000L)
     val classByScc: DataFrame =
-      if (ce.count() <= localThreshold) {
+      if (ceRows <= localThreshold) {
         // driver path (the [[scc]] localTarjan convention): BFS both
         // ways from the core over the DAG + a weak union-find, O(|ce|)
         val es = ce.collect().map(r => (r.get(0), r.get(1)))
@@ -1361,9 +1365,10 @@ object GraphAlgs {
               else
                 ce.join(frontier.withColumnRenamed("c", "cd"), Seq("cd"))
                   .select(col("cs").as("c"))
-            frontier = step.distinct()
-              .join(set, Seq("c"), "left_anti").localCheckpoint()
-            if (frontier.limit(1).count() == 0) more = false
+            val (fr, reached) = Relax.countedCheckpoint(step.distinct()
+              .join(set, Seq("c"), "left_anti"))
+            frontier = fr
+            if (reached == 0) more = false
             else set = set.union(frontier).localCheckpoint()
           }
           set
@@ -1520,8 +1525,8 @@ object GraphAlgs {
         val nbr = e.join(win.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node"))
         val removed = win.union(nbr).distinct().localCheckpoint()
-        val (left, active, _) = Relax.countedCheckpoint(
-          act.join(removed, Seq("node"), "left_anti"), lit(true))
+        val (left, active) = Relax.countedCheckpoint(
+          act.join(removed, Seq("node"), "left_anti"))
         act = left
         e = e.join(removed.withColumnRenamed("node", "src"),
             Seq("src"), "left_anti")
@@ -1576,13 +1581,13 @@ object GraphAlgs {
         .filter(col("ca") =!= col("cb"))
       val st = struct(col("w"), col("a"), col("b"),
         col("ca"), col("cb"))
-      val (chosen, nChosen, _) = Relax.countedCheckpoint(
+      val (chosen, nChosen) = Relax.countedCheckpoint(
         lab.select(col("ca").as("c"), st.as("e"))
         .union(lab.select(col("cb").as("c"), st.as("e")))
         .groupBy("c").agg(min(col("e")).as("e"))
         .select(col("e.w").as("w"), col("e.a").as("a"),
           col("e.b").as("b"), col("e.ca").as("ca"), col("e.cb").as("cb"))
-        .distinct(), lit(true))
+        .distinct())
       r += 1
       val f = chosen.select(col("a"), col("b"), col("w"),
         lit(r).as("round"))
@@ -1621,12 +1626,12 @@ object GraphAlgs {
     * round's nodes as (node, n_nodes, n_edges, best_round).
     */
   def densestSubgraph(edges: DataFrame, rounds: Int): DataFrame = {
-    var (e, _, ne0) = Relax.countedCheckpoint(
+    var (e, ne0) = Relax.countedCheckpoint(
       edges.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst")).distinct()
-        .repartition(col("src")), lit(true))
-    var (v, _, nv0) = Relax.countedCheckpoint(
-      e.select(col("src").as("node")).distinct(), lit(true))
+        .repartition(col("src")))
+    var (v, nv0) = Relax.countedCheckpoint(
+      e.select(col("src").as("node")).distinct())
     var best = v
     var bestR = 0
     var bestNe = ne0 / 2
@@ -1649,17 +1654,17 @@ object GraphAlgs {
       if (nv == 0) done = true
       else {
         val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-        val (v2, _, nv2) = Relax.countedCheckpoint(
+        val (v2, nv2) = Relax.countedCheckpoint(
           v.join(deg, v("node") === deg("src"), "left")
             .filter(coalesce(col("deg"), lit(0L)) * nv > lit(3L) * ne)
-            .select(col("node")), lit(true))
+            .select(col("node")))
         v = v2
-        val (e2, _, ee2) = Relax.countedCheckpoint(
+        val (e2, ee2) = Relax.countedCheckpoint(
           e.join(v.withColumnRenamed("node", "src"), Seq("src"),
               "left_semi")
             .join(v.withColumnRenamed("node", "dst"), Seq("dst"),
               "left_semi")
-            .select(col("src"), col("dst")), lit(true))
+            .select(col("src"), col("dst")))
         e = e2
         val ne2 = ee2 / 2
         val d = if (nv2 == 0) -1.0 else ne2.toDouble / nv2
@@ -1741,9 +1746,8 @@ object GraphAlgs {
       colored = if (colored == null) pick
         else colored.union(pick).localCheckpoint()
       if (r < rounds) {
-        val (left, uncolored, _) = Relax.countedCheckpoint(
-          unc.join(pick.select(col("node")), Seq("node"), "left_anti"),
-          lit(true))
+        val (left, uncolored) = Relax.countedCheckpoint(
+          unc.join(pick.select(col("node")), Seq("node"), "left_anti"))
         unc = left
         done = uncolored == 0
       }

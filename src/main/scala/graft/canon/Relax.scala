@@ -83,17 +83,31 @@ object Relax {
     Result(state, trace.result(), states.result(), converged)
   }
 
-  /** `df.localCheckpoint()`, returned with the number of its rows that
-    * satisfy `pred` and the number of all its rows. Both counts are
-    * observed metrics of the checkpoint job itself, so a loop's exit test
-    * costs no job of its own (an `isEmpty` or `count` on the checkpointed
-    * frame would). */
+  /** `df.localCheckpoint()`, returned with the value of each aggregate
+    * over its rows, keyed by the aggregate's alias. The aggregates are observed
+    * metrics of the checkpoint job itself, so a count, min or max of the
+    * frame just materialized costs no job of its own (a `count`,
+    * `isEmpty` or `agg(...).collect()` on the checkpoint would). Over no
+    * rows a count observes 0 and a min or max null. */
+  def observedCheckpoint(df: DataFrame, agg: Column,
+      aggs: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val cp = df.observe(obs, agg, aggs: _*).localCheckpoint()
+    (cp, obs.get)
+  }
+
+  /** [[observedCheckpoint]] of the number of rows that satisfy `pred`
+    * and the number of all rows: a loop's exit test at no job's cost. */
   def countedCheckpoint(df: DataFrame,
       pred: Column): (DataFrame, Long, Long) = {
-    val obs = Observation()
-    val cp = df.observe(obs, count(when(pred, lit(1))).as("hits"),
-      count(lit(1)).as("rows")).localCheckpoint()
-    val m = obs.get
+    val (cp, m) = observedCheckpoint(df,
+      count(when(pred, lit(1))).as("hits"), count(lit(1)).as("rows"))
     (cp, m("hits").asInstanceOf[Long], m("rows").asInstanceOf[Long])
+  }
+
+  /** [[observedCheckpoint]] of the row count alone. */
+  def countedCheckpoint(df: DataFrame): (DataFrame, Long) = {
+    val (cp, m) = observedCheckpoint(df, count(lit(1)).as("rows"))
+    (cp, m("rows").asInstanceOf[Long])
   }
 }

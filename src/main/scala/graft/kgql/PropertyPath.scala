@@ -48,19 +48,19 @@ object PropertyPath {
     }
     // each hop's checkpoint job also counts the new frontier, so the
     // drained-frontier exit costs no job of its own
-    var (known, reached, _) = Relax.countedCheckpoint(
-      seeds.withColumn("dist", lit(1)), lit(true))
+    var (known, reached) = Relax.countedCheckpoint(
+      seeds.withColumn("dist", lit(1)))
     var frontier = known
     var hop = 1
     while (hop < maxHops && reached > 0) {
       hop += 1
-      val (next, n, _) = Relax.countedCheckpoint(frontier
+      val (next, n) = Relax.countedCheckpoint(frontier
         .select(col("src"), col("dst").as("via"))
         .join(e.select(col("src").as("via"), col("dst")), Seq("via"))
         .select(col("src"), col("dst"))
         .distinct()
         .join(known.select("src", "dst"), Seq("src", "dst"), "left_anti")
-        .withColumn("dist", lit(hop)), lit(true))
+        .withColumn("dist", lit(hop)))
       reached = n
       // round-6: keep `known` as a lazy union of the per-hop
       // checkpointed frames (the doubleSweep dist shape) — the old

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.canon.ConnectedComponents
+import graft.canon.{ConnectedComponents, Relax}
 import graft.extract.{Gazetteer, MentionScan}
 
 /** Canonical graph + its component map, the unit of incremental
@@ -130,14 +130,15 @@ object IncrementalKg {
   /** [[merge]] with its intermediates exposed for scale accounting. */
   def mergeParts(prev: KgGraph, batch: KgGraph): MergeParts = {
     // -- 1. which prev components does the batch touch? ∝ batch --------
-    val batchComps = batch.components.localCheckpoint()
-    val batchRows = batchComps.count()
+    // every checkpoint below counts its rows in its own job (an observed
+    // metric): the broadcast guards cost no separate count job
+    val (batchComps, batchRows) =
+      Relax.countedCheckpoint(batch.components)
     val batchNodes = batchComps.select("node")
-    val touchedPrevLabels = prev.components
-      .join(bcastIfSmall(batchNodes, batchRows), Seq("node"), "left_semi")
-      .select(col("component")).distinct()
-      .localCheckpoint()
-    val nTouched = touchedPrevLabels.count()
+    val (touchedPrevLabels, nTouched) = Relax.countedCheckpoint(
+      prev.components
+        .join(bcastIfSmall(batchNodes, batchRows), Seq("node"), "left_semi")
+        .select(col("component")).distinct())
 
     // -- 2. CC over the touched subgraph only --------------------------
     // star edges of touched prev components (ALL their members — the
@@ -158,30 +159,27 @@ object IncrementalKg {
     // prev.components and present in prev triples under their raw URI)
     // that the batch newly connects. Entries for non-label members of
     // touched components match no prev endpoint and are harmless.
-    val changedPrev = subMap
+    val (changedPrev, nChangedPrev) = Relax.countedCheckpoint(subMap
       .filter(col("node") =!= col("component"))
-      .select(col("node").as("oldLabel"), col("component").as("newLabel"))
-      .localCheckpoint()
-    val nChangedPrev = changedPrev.count()
+      .select(col("node").as("oldLabel"), col("component").as("newLabel")))
     // BATCH side: batch triples may carry endpoints that are lone IN THE
     // BATCH but already canonicalized in an UNTOUCHED prev component —
     // those need the prev label map on top of the subgraph map (one more
     // broadcast semi-join scan of prev.components, output ∝ batch).
-    val batchEnds = batch.triples
+    val (batchEnds, nBatchEnds) = Relax.countedCheckpoint(batch.triples
       .select(explode(array(col("s"), col("o"))).as("node"))
       // doc-URI subjects can never appear in a component map — keep the
       // broadcast strictly ∝ batch ENTITIES (second-pass review)
       .filter(!col("node").startsWith(MentionScan.DocUriPrefix))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val prevMapForBatch = prev.components
-      .join(bcastIfSmall(batchEnds, batchEnds.count()), Seq("node"), "left_semi")
+      .join(bcastIfSmall(batchEnds, nBatchEnds), Seq("node"), "left_semi")
       .join(bcastIfSmall(touchedPrevLabels, nTouched),
         Seq("component"), "left_anti") // touched comps: subMap is current
       .filter(col("node") =!= col("component"))
       .select(col("node").as("oldLabel"), col("component").as("newLabel"))
-    val changedBatch = changedPrev.union(prevMapForBatch).localCheckpoint()
-    val nChangedBatch = changedBatch.count()
+    val (changedBatch, nChangedBatch) =
+      Relax.countedCheckpoint(changedPrev.union(prevMapForBatch))
 
     // -- 4. rewrite ONLY what changed ----------------------------------
     // prev triples: broadcast left joins against the ∝-batch changed
@@ -218,9 +216,8 @@ object IncrementalKg {
     // any post-merge duplicate pair involves ≥1 rewritten-or-batch row
     // (untouched prev rows are distinct among themselves: distinct
     // before, endpoints unchanged)
-    val candidates = rewrittenPrev.union(batchFinal).distinct()
-      .localCheckpoint()
-    val nCand = candidates.count()
+    val (candidates, nCand) =
+      Relax.countedCheckpoint(rewrittenPrev.union(batchFinal).distinct())
     // rows of the untouched remainder that already carry a candidate
     // triple: one broadcast semi-join scan, small output
     val dupsInU = untouchedPrev

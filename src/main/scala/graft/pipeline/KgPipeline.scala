@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -29,6 +30,11 @@ import graft.shape.ShapeRules
   * run can prove input equivalence file by file. A commit costs only its
   * write: lineage needs no Spark job, and the read-back a commit returns
   * reuses the schema it just wrote instead of inferring it.
+  *
+  * Phase 3 commits two snapshots, `issues` and `triples`, from one
+  * shape pass: [[ShapeRules.tag]] runs the candidate scans and the typeOf
+  * joins once, its tagged rows are checkpointed, and both commits write
+  * [[ShapeRules.split]]'s projections of that checkpoint.
   */
 object KgPipeline {
 
@@ -167,9 +173,13 @@ object KgPipeline {
 
   private def writeLineage(spark: SparkSession, out: String, phase: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
+    // one set of read options per phase: `open(InputFile)` alone builds
+    // them from a fresh Configuration, re-parsing the Hadoop XML
+    // resources for every part file
+    val opts = HadoopReadOptions.builder(conf).build()
     val lines = partFiles(phaseDir(out, phase)).map { f =>
       val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(f.toUri), conf))
+        HadoopInputFile.fromPath(new HPath(f.toUri), conf), opts)
       val rows = try r.getRecordCount finally r.close()
       s"""{"file":"${f.getFileName}","rows":$rows}""" + "\n"
     }
@@ -351,7 +361,9 @@ object KgPipeline {
         val candidate = MentionScan.mentionTriples(mentions)
           .union(MentionScan.coOccurrenceTriplesFused(mentions,
             gazetteer.entityList).select("s", "p", "o"))
-        val (valid, iss) = ShapeRules.validate(candidate, typeTriples, shapeRules(spark))
+        // one shape pass, materialized once for both commits (see above)
+        val (valid, iss) = ShapeRules.split(ShapeRules.tag(candidate,
+          typeTriples, shapeRules(spark)).localCheckpoint())
         // issues first: `done` keys on the triples marker, so a crash
         // between the two writes must leave triples uncommitted
         val i = commit(iss, outDir, "issues")

@@ -27,19 +27,25 @@ object ShapeRules {
     rules.toDF("pred", "domainClass", "rangeClass")
   }
 
-  /** Validate instance triples against (typeOf, rules).
+  /** Tag instance triples against (typeOf, rules): one pass whose rows
+    * carry both verdicts, so a caller that materializes it once can
+    * write the valid triples and the issues without recomputing the
+    * joins ([[split]] projects the two).
     *
     * @param triples (s, p, o)
     * @param typeOf  (node, cls) — rdf:type assertions
     * @param rules   (pred, domainClass, rangeClass)
-    * @return (valid triples, issue rows (category, severity, message, uri))
+    * @return (s, p, o, valid, category): `valid` is the shape predicate
+    *         (null where a null rule class makes a comparison unknown,
+    *         which [[split]] treats as not valid), `category` the issue
+    *         category or null
     *
     * Plan: broadcast rules (dictionary-sized); typeOf joins are the big
     * shuffles — both are equi-joins on the node id, so they co-partition
     * with the canonicalization stage that follows.
     */
-  def validate(triples: DataFrame, typeOf: DataFrame,
-               rules: DataFrame): (DataFrame, DataFrame) = {
+  def tag(triples: DataFrame, typeOf: DataFrame,
+          rules: DataFrame): DataFrame = {
     val st = typeOf.select(col("node").as("s"), col("cls").as("sCls"))
     val ot = typeOf.select(col("node").as("o"), col("cls").as("oCls"))
     val joined = triples
@@ -53,15 +59,18 @@ object ShapeRules {
     val rangeViolation = !unknownPred && col("rangeClass").isNotNull &&
       (col("oCls").isNull || col("oCls") =!= col("rangeClass"))
 
-    val valid = joined
-      .filter(!unknownPred && !domainViolation && !rangeViolation)
-      .select("s", "p", "o")
+    joined.select(col("s"), col("p"), col("o"),
+      (!unknownPred && !domainViolation && !rangeViolation).as("valid"),
+      when(unknownPred, "undeclared-predicate")
+        .when(domainViolation, "domain-violation")
+        .when(rangeViolation, "range-violation").as("category"))
+  }
 
-    val issues = joined
-      .withColumn("category",
-        when(unknownPred, "undeclared-predicate")
-          .when(domainViolation, "domain-violation")
-          .when(rangeViolation, "range-violation"))
+  /** The two projections of a [[tag]]ged frame: (valid triples (s, p, o),
+    * issue rows (category, severity, message, uri)). */
+  def split(tagged: DataFrame): (DataFrame, DataFrame) = {
+    val valid = tagged.filter(col("valid")).select("s", "p", "o")
+    val issues = tagged
       .filter(col("category").isNotNull)
       .select(col("category"),
         when(col("category") === "undeclared-predicate", lit("warning"))
@@ -69,7 +78,11 @@ object ShapeRules {
         concat(lit("triple ("), col("s"), lit(", "), col("p"), lit(", "),
           col("o"), lit(") violates shape")).as("message"),
         col("p").as("uri"))
-
     (valid, issues)
   }
+
+  /** Validate instance triples: `split(tag(...))`, both sides lazy. */
+  def validate(triples: DataFrame, typeOf: DataFrame,
+               rules: DataFrame): (DataFrame, DataFrame) =
+    split(tag(triples, typeOf, rules))
 }

@@ -1,5 +1,9 @@
 package graft.canon
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -7,7 +11,7 @@ import org.apache.spark.sql.functions._
   * bipartite graph, max-normalization invariants, bipartite zero sides,
   * and partitioning invariance (integer sums + max + floor division are
   * reduction-order-independent, so scores must be bit-identical across
-  * partition layouts).
+  * partition layouts), the empty graph, and the jobs a run costs.
   */
 class HitsSpec extends SparkSpec {
   import spark.implicits._
@@ -69,5 +73,19 @@ class HitsSpec extends SparkSpec {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(s("y")._1 > 0L && s("y")._2 > 0L)
     assert(s("z")._2 == Hits.Scale) // z collects both strongest links
+  }
+
+  test("empty edge table: no scores, and the observed max never blocks") {
+    val e = Seq.empty[(String, String)].toDF("src", "dst")
+    val got = Await.result(Future(Hits.run(e, 2).collect()), 2.minutes)
+    assert(got.isEmpty)
+  }
+
+  test("a run costs a pinned number of Spark jobs") {
+    val (_, cost) = org.apache.spark.Meter(spark.sparkContext) {
+      Hits.run(edges, 3).write.format("noop").mode("overwrite").save()
+    }
+    // a separate max aggregate per half-round raises this count
+    assert(cost.jobs == 24, "jobs of Hits.run(iters = 3) into the noop sink")
   }
 }

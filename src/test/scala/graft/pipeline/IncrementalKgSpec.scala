@@ -158,4 +158,40 @@ class IncrementalKgSpec extends SparkSpec {
     assert(tripleSet(merged.triples) == tripleSet(base.triples))
     assert(compMap(merged.components) == compMap(base.components))
   }
+
+  /** Two parity halves as materialized graphs, so a meter around a merge
+    * counts the merge's own jobs only. */
+  private def halves(): (KgGraph, KgGraph) = {
+    def g(k: Int) = {
+      val b = IncrementalKg.fromPages(pages.filter(col("doc_id") % 2 === k), gaz)
+      KgGraph(b.triples.localCheckpoint(), b.components.localCheckpoint())
+    }
+    (g(0), g(1))
+  }
+
+  test("an empty batch touches nothing, and the observed counts never block") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val (prev, batch) = halves()
+    val empty = KgGraph(batch.triples.limit(0), batch.components.limit(0))
+    val parts = Await.result(Future(IncrementalKg.mergeParts(prev, empty)),
+      2.minutes)
+    assert(parts.touchedPrevLabels.count() == 0)
+    assert(parts.delta.count() == 0)
+    assert(tripleSet(parts.graph.triples) == tripleSet(prev.triples))
+    assert(compMap(parts.graph.components) == compMap(prev.components))
+  }
+
+  test("mergeParts costs a pinned number of Spark jobs") {
+    val (prev, batch) = halves()
+    val (_, cost) = org.apache.spark.Meter(spark.sparkContext) {
+      val g = IncrementalKg.mergeParts(prev, batch).graph
+      Seq(g.triples, g.components).foreach(
+        _.write.format("noop").mode("overwrite").save())
+    }
+    // a count() of a frame the merge has just checkpointed (each of them
+    // sizes a broadcast guard) raises this count
+    assert(cost.jobs == 24, "jobs of mergeParts of two halves into the noop sink")
+  }
 }

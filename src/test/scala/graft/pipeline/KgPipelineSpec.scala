@@ -77,7 +77,7 @@ class KgPipelineSpec extends SparkSpec {
       // invariant count, a skew aggregation below the hot-key floor or a
       // merge that re-loads the delta snapshot it just committed each
       // raises this count
-      assert(cost.jobs == 88, "jobs of one run + merge")
+      assert(cost.jobs == 60, "jobs of one run + merge")
     } finally Seq(a, b, out, outM).foreach(rm)
   }
 

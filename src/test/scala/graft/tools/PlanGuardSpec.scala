@@ -19,8 +19,6 @@ import graft.SparkSpec
   *    (`text/Bm25.scala` scalars), broadcast 1 row;
   *  - sketch_bloom: probe verdicts × the filter-popcount scalar
   *    (`queries/DataQueries.scala` popcount), broadcast 1 row;
-  *  - kg_hits: per-half-round max-normalization — node scores × the
-  *    1-row MAX(raw) scalar (`canon/Hits.scala` normalize);
   *  - txt_heavyhitters: candidate exact counts × the corpus-total
   *    scalar (`sketch/HeavyHitters.scala` exact), broadcast 1 row;
   *  - txt_collocations: bigram contingency rows × the total-bigrams
@@ -49,7 +47,7 @@ class PlanGuardSpec extends SparkSpec {
 
   private val scalarBnljAllowed =
     Set("onto_limits", "txt_perplexity", "txt_bm25", "sketch_bloom",
-      "kg_hits", "sketch_theta", "txt_heavyhitters", "txt_collocations",
+      "sketch_theta", "txt_heavyhitters", "txt_collocations",
       "mix_kl", "kg_sssp")
 
   private def noop(s: SparkSession, q: String): Unit =
@@ -81,7 +79,7 @@ class PlanGuardSpec extends SparkSpec {
       .map { case (q, l) => s"$q=${l(node)}" }.mkString(" ")
     assert(total("ObjectHashAggregate") == 55,
       s"ObjectHashAggregate nodes: ${where("ObjectHashAggregate")}")
-    assert(total("SortAggregate") == 64,
+    assert(total("SortAggregate") == 62,
       s"SortAggregate nodes: ${where("SortAggregate")}")
   }
 
