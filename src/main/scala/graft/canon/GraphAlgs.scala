@@ -102,8 +102,8 @@ object GraphAlgs {
     * round can extend a ball.
     */
   def hopCloseness(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src"))
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(col("src")).distinct()
       .localCheckpoint()
     val seeds = e.select(col("src").as("root")).distinct()
       .select(col("root"), col("root").as("node"), lit(0L).as("dist"))
@@ -150,8 +150,8 @@ object GraphAlgs {
     */
   def temporalReach(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("t")).distinct()
-      .repartition(col("src"))
+    val e = edges.select(col("src"), col("dst"), col("t"))
+      .repartition(col("src")).distinct()
       .localCheckpoint()
     var d = seeds.select(col("node"), lit(Long.MinValue).as("t_arr"),
         lit(0).as("r"))
@@ -268,8 +268,8 @@ object GraphAlgs {
     */
   def stressCentrality(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src"))
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(col("src")).distinct()
       .localCheckpoint()
     var b = seeds.select(col("node").as("seed"), col("node"),
         lit(0L).as("dist"), lit(1L).as("sigma"))
@@ -350,8 +350,8 @@ object GraphAlgs {
     */
   def maximalMatching(edges: DataFrame, rounds: Int): DataFrame = {
     var e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
+      .filter(col("src") =!= col("dst"))
+      .repartition(col("src")).distinct()
       .localCheckpoint()
     var out: DataFrame = null
     // Round-6: an empty mutual-proposal round is the exact fixpoint —
@@ -481,8 +481,8 @@ object GraphAlgs {
     * neighbour-community count, bounded by degree, never |V|.
     */
   def louvainMove(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src"))
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(col("src")).distinct()
       .localCheckpoint()
     val m = e.count() / 2 // both directions present
     val deg = e.groupBy(col("src").as("node"))
@@ -1155,7 +1155,7 @@ object GraphAlgs {
     // src UNION dst min; identical on the symmetric-input contract, and
     // correct for any future directed caller — round-6 advice)
     val (e, em) = Relax.observedCheckpoint(
-      edges.select(col("src"), col("dst")).distinct().repartition(col("src")),
+      edges.select(col("src"), col("dst")).repartition(col("src")).distinct(),
       min(least(col("src"), col("dst"))).as("s0"))
     // frontier-DELTA BFS: for unit weights first-reach IS min-hop, so
     // each round joins only the NEW nodes — work ∝ edges TOTAL, not
@@ -1165,9 +1165,13 @@ object GraphAlgs {
     // jobs never launch), and the last non-empty frontier is the
     // farthest ring. Returns (dist, farthest round, its min node).
     def bfs(source: String): (DataFrame, Long, String) = {
-      var dist = e.sparkSession.range(1)
-        .select(lit(source).as("node"), lit(0L).as("dist"))
-        .localCheckpoint()
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      // a local relation: the seed row costs no job
+      var dist = e.sparkSession.createDataFrame(
+        java.util.List.of(Row(source, 0L)),
+        StructType(Seq(StructField("node", e.schema("src").dataType),
+          StructField("dist", LongType, nullable = false))))
       var frontier = dist.select("node")
       var (far, farNode) = (0L, source)
       var k = 1L
@@ -1502,8 +1506,8 @@ object GraphAlgs {
     */
   def maximalIndependentSet(edges: DataFrame, rounds: Int): DataFrame = {
     var e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
+      .filter(col("src") =!= col("dst"))
+      .repartition(col("src")).distinct()
       .localCheckpoint()
     var act = e.select(col("src").as("node")).distinct().localCheckpoint()
     var out: DataFrame = null
@@ -1628,8 +1632,8 @@ object GraphAlgs {
   def densestSubgraph(edges: DataFrame, rounds: Int): DataFrame = {
     var (e, ne0) = Relax.countedCheckpoint(
       edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-        .repartition(col("src")))
+        .filter(col("src") =!= col("dst"))
+        .repartition(col("src")).distinct())
     var (v, nv0) = Relax.countedCheckpoint(
       e.select(col("src").as("node")).distinct())
     var best = v
@@ -1692,67 +1696,60 @@ object GraphAlgs {
     * production salts priorities per the JP paper for O(log n / log
     * log n) expected rounds.
     *
-    * edges(src, dst): both directions. Scale shape per round: one min
-    * agg over uncolored neighbours (the local-min test), one
-    * collect_set of ≤deg colored-neighbour colors, the
-    * smallest-missing-color computed in-row over that bounded array
-    * (sequence + filter + array_min, codegen'd) — id-width shuffles
-    * only. Returns (node, color) for nodes colored in-budget.
+    * edges(src, dst): both directions. Scale shape per round: the
+    * state is one (node, color) frame, color null while uncolored. A
+    * round joins the edges to the state on `dst`, unions in the state's
+    * own rows and runs ONE groupBy(node) that yields the min uncolored
+    * neighbour (the local-min test), the set of ≤deg colored-neighbour
+    * colors and the node's own color; a local minimum takes the
+    * smallest color missing from that set, computed in-row over the
+    * bounded array (sequence + filter + array_min, codegen'd) —
+    * id-width shuffles only. Round 1 has no colored neighbours yet, so
+    * its aggregate carries no color set (a collect_set needs an object
+    * buffer, which the primitive hash aggregate cannot hold). The
+    * round's checkpoint job counts the nodes still uncolored, which is
+    * the exit test. Returns (node, color) for nodes colored in-budget.
     */
   def jpColoring(edges: DataFrame, rounds: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
+      .filter(col("src") =!= col("dst"))
+      .repartition(col("src")).distinct()
       .localCheckpoint()
-    var colored: DataFrame = null
-    var unc = e.select(col("src").as("node")).distinct().localCheckpoint()
-    // Round-6: an empty uncolored set is the exact fixpoint — every
+    val nodeType = e.schema("src").dataType
+    var state = e.select(col("src").as("node"),
+      lit(null).cast("int").as("color")).distinct()
+    // Round-6: no uncolored node left is the exact fixpoint — every
     // later round wins nothing and colors nothing — so remaining
     // rounds are skipped as provable no-ops.
     var r = 0
     var done = false
     while (r < rounds && !done) {
       r += 1
-      val eu = e.join(unc.withColumnRenamed("node", "dst"), Seq("dst"),
-          "left_semi")
-        .join(unc.withColumnRenamed("node", "src"), Seq("src"),
-          "left_semi")
-      val minU = eu.groupBy("src").agg(min(col("dst")).as("mn"))
-      val win = unc.join(minU, unc("node") === minU("src"), "left")
-        .filter(col("mn").isNull || col("node") < col("mn"))
-        .select(col("node"))
-        .localCheckpoint()
-      val nbrColors =
-        if (colored == null)
-          win.select(col("node"),
-            array().cast("array<int>").as("used"))
-        else {
-          val agg = e.join(win.withColumnRenamed("node", "src"),
-              Seq("src"), "left_semi")
-            .join(colored.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src").agg(collect_set(col("color")).as("used"))
-            .select(col("src").as("node"), col("used"))
-          win.join(agg, Seq("node"), "left")
-            .select(col("node"),
-              coalesce(col("used"), array().cast("array<int>"))
-                .as("used"))
-        }
+      val nbr = e.join(state.select(col("node").as("dst"),
+          col("color").as("c")), "dst")
+        .select(col("src").as("node"), col("dst"), col("c"),
+          lit(null).cast("int").as("own"))
+      val self = state.select(col("node"),
+        lit(null).cast(nodeType).as("dst"), lit(null).cast("int").as("c"),
+        col("color").as("own"))
+      val (usedAgg, used) =
+        if (r == 1) (Nil, array().cast("array<int>"))
+        else (Seq(collect_set(col("c")).as("used")), col("used"))
+      val g = nbr.union(self).groupBy("node").agg(
+        min(when(col("c").isNull, col("dst"))).as("mn"),
+        (max(col("own")).as("own") +: usedAgg): _*)
       // smallest non-negative color absent from `used`: scan
       // 0..size(used) — one of those values must be free.
-      val pick = nbrColors.select(col("node"),
-        array_min(filter(sequence(lit(0), size(col("used"))),
-          c => !array_contains(col("used"), c))).as("color"))
-        .localCheckpoint()
-      colored = if (colored == null) pick
-        else colored.union(pick).localCheckpoint()
-      if (r < rounds) {
-        val (left, uncolored) = Relax.countedCheckpoint(
-          unc.join(pick.select(col("node")), Seq("node"), "left_anti"))
-        unc = left
-        done = uncolored == 0
-      }
+      val next = g.select(col("node"), coalesce(col("own"),
+        when(col("mn").isNull || col("node") < col("mn"),
+          array_min(filter(sequence(lit(0), size(used)),
+            c => !array_contains(used, c))))).as("color"))
+      val (cp, uncolored, _) =
+        Relax.countedCheckpoint(next, col("color").isNull)
+      state = cp
+      done = uncolored == 0
     }
-    colored
+    state.filter(col("color").isNotNull)
   }
 
   /** Per-node butterfly counts over a bipartite graph summarized as a

@@ -66,9 +66,13 @@ object Hits {
         .select(col("src").as("node"), col("raw"))
       hub = normalize(hraw, "h")
     }
-    hub.join(auth, Seq("node"), "full_outer")
-      .select(col("node"),
-        coalesce(col("h"), lit(0L)).as("hub"),
-        coalesce(col("a"), lit(0L)).as("auth"))
+    // each node is on each side at most once: one groupBy over both
+    // sides assembles (node, hub, auth) with a single shuffle, where a
+    // full outer join shuffles both
+    hub.select(col("node"), col("h"), lit(0L).as("a"))
+      .union(auth.select(col("node"), lit(0L).as("h"), col("a")))
+      .groupBy("node")
+      .agg(coalesce(sum(col("h")), lit(0L)).as("hub"),
+        coalesce(sum(col("a")), lit(0L)).as("auth"))
   }
 }

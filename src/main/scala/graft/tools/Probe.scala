@@ -16,8 +16,9 @@ import graft.{LocalSession, SparkEntry}
   * each query runs once warm, then `Repeats` times into the noop sink
   * (every column of every row computed, nothing collected, no write
   * cost) under [[org.apache.spark.Meter]]. One JSON line per query:
-  * `wall_s` and `jobs` per repeat, the last repeat's `cost` and plan
-  * `lints`, and the host's 1-minute load average after the query.
+  * `wall_s` and `jobs` per repeat, the last repeat's `cost` (with its
+  * codegen `compiles`) and plan `lints`, and the host's 1-minute load
+  * average after the query.
   * A query that throws gets a row with its exception class instead, and
   * its stack trace goes to stderr.
   *

@@ -1,16 +1,20 @@
 package org.apache.spark
 
 import scala.collection.mutable
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
 /** What a block of code cost Spark: its jobs, the stages and tasks
-  * those jobs ran, and the tasks' summed metrics. Byte fields are bytes;
-  * `maxTaskShuffleReadBytes` and `peakExecutionMemory` are maxima over
-  * tasks, every other field a sum. */
+  * those jobs ran, the tasks' summed metrics, and the generated classes
+  * compiled meanwhile. Byte fields are bytes; `maxTaskShuffleReadBytes`
+  * and `peakExecutionMemory` are maxima over tasks, every other field a
+  * sum. `compiles` counts whole-stage and expression codegen compiles
+  * (cache misses of the JVM's one generated-class cache), so it also
+  * counts those of any other code running in the JVM at the time. */
 final case class Cost(jobs: Int, stages: Int, tasks: Int,
     taskSeconds: Double, shuffleReadBytes: Long, shuffleWriteBytes: Long,
     maxTaskShuffleReadBytes: Long, inputBytes: Long, spillBytes: Long,
-    peakExecutionMemory: Long) {
+    peakExecutionMemory: Long, compiles: Long) {
   /** One JSON object, fields in declaration order. */
   def json: String = productElementNames.zip(productIterator)
     .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
@@ -29,12 +33,16 @@ object Meter {
     val listener = new GroupListener(group)
     sc.addSparkListener(listener)
     try {
+      val compiles0 = compiles
       sc.setJobGroup(group, group)
       val r = try f finally sc.clearJobGroup()
       sc.listenerBus.waitUntilEmpty()
-      (r, listener.cost)
+      (r, listener.cost(compiles - compiles0))
     } finally sc.removeSparkListener(listener)
   }
+
+  private def compiles: Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private final class GroupListener(group: String) extends SparkListener {
     private val stageIds = mutable.HashSet.empty[Int]
@@ -69,9 +77,9 @@ object Meter {
       }
     }
 
-    def cost: Cost = synchronized {
+    def cost(compiles: Long): Cost = synchronized {
       Cost(jobs, stages, tasks, taskMs / 1e3, shR, shW, maxShR, input,
-        spill, peakMem)
+        spill, peakMem, compiles)
     }
   }
 }

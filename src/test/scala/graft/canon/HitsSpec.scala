@@ -85,7 +85,8 @@ class HitsSpec extends SparkSpec {
     val (_, cost) = org.apache.spark.Meter(spark.sparkContext) {
       Hits.run(edges, 3).write.format("noop").mode("overwrite").save()
     }
-    // a separate max aggregate per half-round raises this count
-    assert(cost.jobs == 24, "jobs of Hits.run(iters = 3) into the noop sink")
+    // a separate max aggregate per half-round, or a join (not one
+    // groupBy) to assemble hub and auth, raises this count
+    assert(cost.jobs == 23, "jobs of Hits.run(iters = 3) into the noop sink")
   }
 }

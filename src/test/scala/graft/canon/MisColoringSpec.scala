@@ -125,6 +125,18 @@ class MisColoringSpec extends SparkSpec {
     }, n = 8)
   }
 
+  test("coloring of an empty or self-loop-only edge table is empty") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // the round's observed uncolored count must arrive over no rows
+    def colors(es: Seq[(String, String)]): Map[String, Int] =
+      Await.result(Future(GraphAlgs.jpColoring(es.toDF("src", "dst"), 3)
+        .as[(String, Int)].collect().toMap), 2.minutes)
+    assert(colors(Nil).isEmpty)
+    assert(colors(Seq(("a", "a"), ("b", "b"))).isEmpty)
+  }
+
   test("coloring converges to a total proper coloring") {
     check(Prop.forAll(genEdges) { es =>
       es.isEmpty || {

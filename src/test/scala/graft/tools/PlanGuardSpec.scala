@@ -79,7 +79,7 @@ class PlanGuardSpec extends SparkSpec {
       .map { case (q, l) => s"$q=${l(node)}" }.mkString(" ")
     assert(total("ObjectHashAggregate") == 55,
       s"ObjectHashAggregate nodes: ${where("ObjectHashAggregate")}")
-    assert(total("SortAggregate") == 62,
+    assert(total("SortAggregate") == 58,
       s"SortAggregate nodes: ${where("SortAggregate")}")
   }
 
